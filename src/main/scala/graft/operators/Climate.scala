@@ -124,12 +124,15 @@ object Climate {
       .withColumn("boundary_gap", abs(col("lo") - lag(col("hi"), 1).over(wb)))
       .groupBy(col("axis"))
       .agg(round(least(min(col("min_gap")), min(col("boundary_gap"))), 4).as("res"))
-    perAxis.agg(
-      axes.head match { case (c, d) =>
-        coalesce(max(when(col("axis") === c, col("res"))), lit(d)).as(s"${c}_res") },
-      axes.tail.map { case (c, d) =>
-        coalesce(max(when(col("axis") === c, col("res"))), lit(d)).as(s"${c}_res") }: _*)
+    val res = resolutionColumns(axes)
+    perAxis.agg(res.head, res.tail: _*)
   }
+
+  /** Folds (axis, res) rows into one `<axis>_res` column per axis: the
+    * axis's inferred resolution, or its default when it has none. */
+  private def resolutionColumns(axes: Seq[(String, Double)]): Seq[Column] =
+    axes.map { case (c, d) =>
+      coalesce(max(when(col("axis") === c, col("res"))), lit(d)).as(s"${c}_res") }
 
   /** Integer grid-cell index for a coordinate: floor((x+offset)/band).
     * Joining on integer cell indices (not floats) keeps the semi-join
@@ -220,10 +223,10 @@ object Climate {
     if (covered) Some(md.digest().map("%02x".format(_)).mkString) else None
   }
 
-  /** Drop every memoized mask/statistic — for callers that just bulk-
-    * rewrote data and want rebuilds without waiting for fingerprint
-    * misses to age entries out. */
-  def clearPlanCaches(): Unit = { cellMaskCache.clear(); largestMonthCache.clear() }
+  /** Drop every memoized mask — for callers that just bulk-rewrote
+    * data and want rebuilds without waiting for fingerprint misses to
+    * age entries out. */
+  def clearPlanCaches(): Unit = cellMaskCache.clear()
 
   def landCellMask(landCells: DataFrame): graft.plans.CellMask = {
     // memoized per (canonicalized lookup plan, file fingerprint): the
@@ -333,101 +336,43 @@ object Climate {
     * single-value ceiling. The sf1 sweep demonstrated why the old
     * 1<<20 bound was wrong: a single-month archive slid a ~70 MB
     * month under it and the whole relation collapsed into one
-    * collect_list task; at 10× more it would be 700 MB. Oversized
-    * months now route through the distributed sharded builder and
-    * reassemble by contiguous shard index. */
+    * collect_list task; at 10× more it would be 700 MB. */
   val MaxFeaturesPerDoc: Int = 1 << 17
-
-  /** Largest-month statistic, memoized per (canonicalized input plan,
-    * source fingerprint) — repeated invocations over the same frame
-    * (verify, bench warmup+timed) pay the counting pass once per
-    * process. Keys compare STRUCTURALLY and by concrete file listing
-    * (see [[sourceFingerprint]]), so distinct inputs — including the
-    * same path after an overwrite/append — never share an entry; a
-    * stale statistic here could route a now-oversized month through
-    * the unbounded in-memory plan. */
-  private val largestMonthCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String), Long]
 
   /** Per-(year,month) FeatureCollection assembly — the reference's
     * actual output document (json.dump({'type': 'FeatureCollection',
     * 'features': [...]}, separators=(',',':')),
     * temperature_pipeline.py:119-120, humidity_pipeline.py:170-172):
-    * one compact-JSON document per month, features ordered by the
-    * given key so the document is deterministic.
+    * compact-JSON documents, features ordered by `orderCol` so every
+    * document is deterministic.
     *
-    * Scale posture — ADAPTIVE between two plans (the AQE pattern, one
-    * scalar pre-aggregation as the statistic): a column-PRUNED count
-    * (Catalyst drops the feature construction — the pass reads only the
-    * grouping columns) finds the largest month; if every month fits
-    * `maxPerDoc`, the document builds with the fully parallel
-    * partial-aggregation plan (map-side collect_list partials, one
-    * merge + in-memory sort per month); an out-of-bound month instead
-    * routes through [[featureCollectionSharded]], whose external sort
-    * degrades to disk and whose output rows are bounded — the 2 GB
-    * single-value death the unbounded plan would hit becomes numbered
-    * document parts. In-bound output is byte-identical on both routes
-    * (ClimateSpec).
+    * Output schema: (year, month, shard, collection). Shard i of a
+    * month holds the features with order-rank in
+    * [i·maxPerDoc, (i+1)·maxPerDoc) — CONTIGUOUS in document order, so
+    * concatenating a month's feature arrays in shard order reproduces
+    * its whole document. A month at or under the bound emits ONE
+    * document, shard 0: the reference's file-per-month output.
     *
-    * Output schema is route-STABLE: (year, month, shard, collection).
-    * In-bound months always carry shard 0; an oversized month's parts
-    * carry their contiguous shard index, so callers can reassemble the
-    * document (concatenate feature arrays in shard order) — the index
-    * is never silently dropped. */
+    * Scale posture: ONE plan for every month size, with nothing
+    * counted ahead of it — building the frame launches no query job.
+    * The per-month rank comes from the DISTRIBUTED grouped prefix sum
+    * (range repartition + broadcast offsets,
+    * [[Windows.withGroupedPrefixSumLazy]]), NOT a (year,month)-
+    * partitioned window — the sf1 sweep caught the window form
+    * absorbing a whole single-month relation into ONE task (the harness
+    * stream spans one month, so "per-month" parallelism is no
+    * parallelism at all; a real archive has the same shape whenever one
+    * period dominates). Each per-shard collect_list then holds at most
+    * `maxPerDoc` features and the (year,month,shard) aggregate fans out
+    * across tasks; the per-shard array_sort rebuilds document order
+    * over a bounded array, so no single value nears Spark's 2 GB
+    * ceiling however large a month grows. `orderCol` must be unique
+    * within a month (it already must be for the document order itself
+    * to be deterministic). */
   def featureCollection(df: DataFrame, featureCol: String,
       orderCol: String, maxPerDoc: Int = MaxFeaturesPerDoc): DataFrame = {
-    def computeLargest(): Long = {
-      val top = df.groupBy(col("year"), col("month"))
-        .agg(count(lit(1)).as("n")).agg(max(col("n"))).head()
-      if (top.isNullAt(0)) 0L else top.getLong(0)
-    }
-    // fail closed on uncoverable sources: recompute rather than memoize
-    val largestMonth = sourceFingerprint(df) match {
-      case None => computeLargest()
-      case Some(fp) =>
-        if (largestMonthCache.size >= PlanCacheBound) largestMonthCache.clear()
-        largestMonthCache.getOrElseUpdate(
-          (df.queryExecution.analyzed.canonicalized, fp), computeLargest())
-    }
-    if (largestMonth > maxPerDoc)
-      featureCollectionSharded(df, featureCol, orderCol, maxPerDoc)
-    else
-      df.groupBy(col("year"), col("month"))
-        .agg(array_join(
-          transform(
-            array_sort(collect_list(struct(col(orderCol), col(featureCol)))),
-            p => p.getField(featureCol)),
-          ",").as("features_joined"))
-        .select(col("year"), col("month"), lit(0).as("shard"),
-          concat(lit("{\"type\":\"FeatureCollection\",\"features\":["),
-            col("features_joined"), lit("]}")).as("collection"))
-  }
-
-  /** Sharded FeatureCollection: shard i of a month holds features with
-    * order-rank in [i·maxPerDoc, (i+1)·maxPerDoc) — CONTIGUOUS in the
-    * document order, so concatenating the parts' feature arrays in
-    * shard order reproduces the unsharded document exactly; months at
-    * or under the bound emit one shard (index 0) whose document is
-    * byte-identical to the unsharded form.
-    *
-    * Scale posture: the per-month rank comes from the DISTRIBUTED
-    * grouped prefix sum (range repartition + broadcast offsets,
-    * [[Windows.withGroupedPrefixSum]]), NOT a (year,month)-partitioned
-    * window — the sf1 sweep caught the window form absorbing a whole
-    * single-month relation into ONE task (the harness stream spans one
-    * month, so "per-month" parallelism is no parallelism at all; a
-    * real archive has the same shape whenever one period dominates).
-    * Each per-shard collect_list then holds at most `maxPerDoc`
-    * features and the (year,month,shard) aggregate fans out across
-    * tasks; the per-shard array_sort rebuilds document order over a
-    * bounded array, the same operation the in-bound route runs on the
-    * whole month. `orderCol` must be unique within a month (it already
-    * must be for the document order itself to be deterministic). */
-  def featureCollectionSharded(df: DataFrame, featureCol: String,
-      orderCol: String, maxPerDoc: Int): DataFrame = {
-    // lazy-pin form: the composite REHEARSALS plan this stage, and the
-    // dry-run contract is zero query jobs at build time
+    // lazy-pin form: dry-run plans the real composites, and the dry-run
+    // contract is zero query jobs at build time
     val ranked = Windows.withGroupedPrefixSumLazy(
       df.withColumn("_ym", concat_ws("-", col("year"), col("month"))),
       "_ym", lit(1L), "_rnk", col(orderCol))
@@ -453,17 +398,25 @@ object Climate {
       cellIndex((col("s_acctbal") * 7 % 360 + 360) % 360 - 180, 180.0, 30.0).as("cell_lon"))
       .distinct()
 
-  /** Shared composite plan: scan -> pushdown time filter -> land-mask
-    * semi-join -> distributed resolution inference (broadcast 1-row
-    * aggregates, no driver collect) -> feature build. */
-  private[operators] def compositeFrame(s: SparkSession, dir: String): DataFrame = {
+  /** The masked-grid prefix every composite shares: scan -> pushdown
+    * (y0,m0)..(y1,m1) month window -> NULL drop -> cell index ->
+    * land-mask semi-join. */
+  private def maskedGrid(s: SparkSession, dir: String,
+      y0: Int, m0: Int, y1: Int, m1: Int): DataFrame = {
     val grid = syntheticGrid(Tables.events(s, dir))
-      .filter(timestampRange(col("ts"), 2024, 1, 2024, 12))
+      .filter(timestampRange(col("ts"), y0, m0, y1, m1))
       .filter(col("value").isNotNull)
-    val masked = landMask(
+    landMask(
       grid.withColumn("cell_lat", cellIndex(col("lat"), 90.0, 30.0))
         .withColumn("cell_lon", cellIndex(col("lon"), 180.0, 30.0)),
       landCells(s, dir))
+  }
+
+  /** Shared composite plan: the 2024 masked grid -> distributed
+    * resolution inference (broadcast 1-row aggregates, no driver
+    * collect) -> feature build. */
+  private[operators] def compositeFrame(s: SparkSession, dir: String): DataFrame = {
+    val masked = maskedGrid(s, dir, 2024, 1, 2024, 12)
     // both axes inferred in one pass over `masked` (vs one scan per axis)
     val res = gridResolutions(masked, Seq("lat" -> 0.5, "lon" -> 0.625))
     withYearMonth(masked.crossJoin(broadcast(res)), "ts")
@@ -496,11 +449,8 @@ object Climate {
       .withColumn("gap", col("v") - lag(col("v"), 1).over(w))
       .groupBy(col("year"), col("month"), col("axis"))
       .agg(round(min(col("gap")), 4).as("res"))
-    perAxis.groupBy(col("year"), col("month")).agg(
-      axes.head match { case (c, d) =>
-        coalesce(max(when(col("axis") === c, col("res"))), lit(d)).as(s"${c}_res") },
-      axes.tail.map { case (c, d) =>
-        coalesce(max(when(col("axis") === c, col("res"))), lit(d)).as(s"${c}_res") }: _*)
+    val res = resolutionColumns(axes)
+    perAxis.groupBy(col("year"), col("month")).agg(res.head, res.tail: _*)
   }
 
   /** Shared prefix of the humidity/temperature composites: scan ->
@@ -508,13 +458,7 @@ object Climate {
     * humidity_pipeline.py:28-31) -> NaN drop -> land mask -> per-month
     * resolution attach (broadcast: one row per month). */
   private[graft] def monthlyMasked(s: SparkSession, dir: String): DataFrame = {
-    val grid = syntheticGrid(Tables.events(s, dir))
-      .filter(timestampRange(col("ts"), 2022, 1, 2025, 5))
-      .filter(col("value").isNotNull)
-    val masked = withYearMonth(landMask(
-      grid.withColumn("cell_lat", cellIndex(col("lat"), 90.0, 30.0))
-        .withColumn("cell_lon", cellIndex(col("lon"), 180.0, 30.0)),
-      landCells(s, dir)), "ts")
+    val masked = withYearMonth(maskedGrid(s, dir, 2022, 1, 2025, 5), "ts")
     masked.join(
       broadcast(monthlyResolutions(masked, Seq("lat" -> 0.5, "lon" -> 0.625))),
       Seq("year", "month"))
@@ -534,16 +478,6 @@ object Climate {
     featureCollection(temperatureFeats(s, dir), "feature", "event_id")
       .orderBy(col("year"), col("month"), col("shard"))
 
-  /** Rehearsal (dry-run) form of [[temperatureComposite]]: the document
-    * stage is the UNCONDITIONALLY sharded plan, so BUILDING the frame
-    * runs no routing-statistic job — a true zero-query-jobs rehearsal.
-    * The rehearsed plan is one of the two real routes (the bounded
-    * one), whose in-bound output is byte-identical to the other. */
-  def temperatureCompositeRehearsal(s: SparkSession, dir: String): DataFrame =
-    featureCollectionSharded(temperatureFeats(s, dir), "feature", "event_id",
-        MaxFeaturesPerDoc)
-      .orderBy(col("year"), col("month"), col("shard"))
-
   /** End-to-end HUMIDITY composite (humidity_pipeline.py:339-360 run
     * order) — the validation-heavy lifecycle: explicit numeric casts on
     * value and coordinates (humidity_pipeline.py:155-163 via
@@ -558,41 +492,23 @@ object Climate {
         humidityFeature(col("lat"), col("lon"), round(col("value"), 4),
           col("ts"), col("lat_res") / 2, col("lon_res") / 2).as("feature"))
 
-  /** The humidity parse-back validation projection, shared by the real
-    * composite and its rehearsal so both plan the same lifecycle. */
-  private def humidityValidated(docs: DataFrame): DataFrame =
-    docs
+  def humidityComposite(s: SparkSession, dir: String): DataFrame =
+    featureCollection(humidityFeats(s, dir), "feature", "event_id")
       .select(col("year"), col("month"), col("shard"), col("collection"),
         json_array_length(get_json_object(col("collection"), "$.features"))
           .cast("long").as("n_features"))
       .withColumn("valid", col("n_features") > 0)
       .orderBy(col("year"), col("month"), col("shard"))
 
-  def humidityComposite(s: SparkSession, dir: String): DataFrame =
-    humidityValidated(
-      featureCollection(humidityFeats(s, dir), "feature", "event_id"))
-
-  /** Rehearsal (dry-run) form of [[humidityComposite]] — see
-    * [[temperatureCompositeRehearsal]] for the contract. */
-  def humidityCompositeRehearsal(s: SparkSession, dir: String): DataFrame =
-    humidityValidated(
-      featureCollectionSharded(humidityFeats(s, dir), "feature", "event_id",
-        MaxFeaturesPerDoc))
-
-  /** The precipitation pipeline's output frame — ONE definition shared
-    * by the real sink ([[climatePipeline]]) and the dry-run rehearsal,
-    * so the rehearsed plan is exactly the plan the real run executes. */
+  /** The precipitation pipeline's output frame: the end-to-end climate
+    * composite (SURVEY §7.3 step 6) as ONE lazy plan, which
+    * [[PipelineManager.runClimatePipelines]] writes to a
+    * (year,month)-partitioned sink with one action — where the
+    * reference materializes to disk between every stage
+    * (precipitation_pipeline.py:604-640). */
   def precipitationFrame(s: SparkSession, dir: String): DataFrame =
     compositeFrame(s, dir)
       .select(col("year"), col("month"), col("feature"))
-
-  /** The end-to-end climate composite (SURVEY §7.3 step 6):
-    * [[precipitationFrame]] → (year,month)-partitioned sink, ONE lazy
-    * plan with one action — where the reference materializes to disk
-    * between every stage (precipitation_pipeline.py:604-640). */
-  def climatePipeline(s: SparkSession, dir: String, outDir: String): Unit =
-    precipitationFrame(s, dir)
-      .write.partitionBy("year", "month").mode("overwrite").parquet(outDir)
 
   /** Great-circle (haversine) distance in km — the geodesic primitive
     * a climate engine needs for station-to-cell matching and radius
@@ -2253,8 +2169,8 @@ object Climate {
 
   val queries: Map[String, Q] = Map(
     "q_agg_group_monthly" -> (monthlyAgg _),
-    // The full composite as ONE lazy plan (sink-less form of
-    // climatePipeline) — fully hash-checked: the oracle replays scan →
+    // The full composite as ONE lazy plan (the precipitation
+    // pipeline's frame) — fully hash-checked: the oracle replays scan →
     // mask → resolution → feature in SQL, byte-identical JSON included.
     "q_climate_composite" -> ((s, d) =>
       compositeFrame(s, d).orderBy(col("event_id"))),

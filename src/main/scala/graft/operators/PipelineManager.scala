@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
@@ -217,7 +217,7 @@ object PipelineManager {
     * its frame separately from its sink, which is also what keeps the
     * frame one lazy Catalyst plan in the real run. */
   def dryRunAll(s: SparkSession,
-      pipelines: Seq[(String, () => org.apache.spark.sql.DataFrame)])
+      pipelines: Seq[(String, () => DataFrame)])
       : (RunSummary, Map[String, String]) = {
     val outcomes = pipelines.map { case (name, plan) =>
       try {
@@ -235,33 +235,29 @@ object PipelineManager {
     (RunSummary(outcomes.map(_._1)), outcomes.flatMap(_._2).toMap)
   }
 
-  /** The reference's default data-type set, end-to-end: precipitation,
-    * temperature, humidity (pipeline_manager.py's `data_types` loop),
-    * each writing under its own subdirectory of `outRoot`. */
-  def runClimatePipelines(s: SparkSession, dir: String, outRoot: String): RunSummary =
-    runAll(s, Seq(
-      "precipitation" -> (() =>
-        Climate.climatePipeline(s, dir, s"$outRoot/precipitation")),
-      "temperature" -> (() =>
-        Climate.temperatureComposite(s, dir)
-          .write.mode("overwrite").parquet(s"$outRoot/temperature")),
-      "humidity" -> (() =>
-        Climate.humidityComposite(s, dir)
-          .write.mode("overwrite").parquet(s"$outRoot/humidity"))))
+  /** The reference's default data-type set (pipeline_manager.py's
+    * `data_types` loop), declared ONCE as (name, output frame, sink
+    * partition columns): [[runClimatePipelines]] writes these frames and
+    * [[dryRunClimatePipelines]] plans the very same ones. */
+  private def climatePipelines(s: SparkSession, dir: String)
+      : Seq[(String, () => DataFrame, Seq[String])] = Seq(
+    ("precipitation", () => Climate.precipitationFrame(s, dir), Seq("year", "month")),
+    ("temperature", () => Climate.temperatureComposite(s, dir), Nil),
+    ("humidity", () => Climate.humidityComposite(s, dir), Nil))
 
-  /** Dry-run of the same three-pipeline set [[runClimatePipelines]]
-    * executes: every frame is resolved and physically planned, no sink
-    * writes, no query jobs AT ALL. The precipitation frame is the very
-    * [[Climate.precipitationFrame]] the real sink writes; the
-    * temperature/humidity rehearsals route the document stage through
-    * the unconditionally sharded plan, because the adaptive route's
-    * 1-row statistic is a REAL job (full scan + mask + windows) — the
-    * one thing a rehearsal must not pay. The rehearsed document plan is
-    * one of the two routes the real run can take. */
+  /** Runs the climate pipelines end-to-end, each writing under its own
+    * subdirectory of `outRoot`. */
+  def runClimatePipelines(s: SparkSession, dir: String, outRoot: String): RunSummary =
+    runAll(s, climatePipelines(s, dir).map { case (name, frame, partitionCols) =>
+      name -> (() => frame().write.partitionBy(partitionCols: _*)
+        .mode("overwrite").parquet(s"$outRoot/$name"))
+    })
+
+  /** Dry-run of [[runClimatePipelines]]: the same declared frames are
+    * resolved and physically planned, with no sink writes and no query
+    * jobs AT ALL — building a composite counts nothing ahead of its
+    * plan, so what is rehearsed is exactly what the real run executes. */
   def dryRunClimatePipelines(s: SparkSession, dir: String)
       : (RunSummary, Map[String, String]) =
-    dryRunAll(s, Seq(
-      "precipitation" -> (() => Climate.precipitationFrame(s, dir)),
-      "temperature" -> (() => Climate.temperatureCompositeRehearsal(s, dir)),
-      "humidity" -> (() => Climate.humidityCompositeRehearsal(s, dir))))
+    dryRunAll(s, climatePipelines(s, dir).map { case (name, frame, _) => name -> frame })
 }

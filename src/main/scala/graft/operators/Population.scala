@@ -70,18 +70,9 @@ object Population {
       .join(broadcast(countries(s, d)),
         gated("country") === col("n_name"), "inner") // drop on miss (:60-62)
       .select(col("country"), col("population"), lit(year).as("year"),
-        to_json(struct(
-          lit("Feature").as("type"),
-          struct(lit("Polygon").as("type"),
-            array(array(
-              array(col("lon") - 0.5, col("lat") - 0.5),
-              array(col("lon") + 0.5, col("lat") - 0.5),
-              array(col("lon") + 0.5, col("lat") + 0.5),
-              array(col("lon") - 0.5, col("lat") + 0.5),
-              array(col("lon") - 0.5, col("lat") - 0.5))).as("coordinates"))
-            .as("geometry"),
+        Climate.geojsonFeatureWith(col("lat"), col("lon"), lit(0.5), lit(0.5),
           struct(col("country").as("name"), col("population"),
-            lit(year).as("year")).as("properties"))).as("feature"))
+            lit(year).as("year"))).as("feature"))
       .orderBy(col("country"))
   }
 

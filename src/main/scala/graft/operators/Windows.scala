@@ -124,14 +124,14 @@ object Windows {
     * consume ONE cached plan instance, so the range exchange executes
     * (and samples its boundaries) exactly once, at first
     * materialization inside the cached relation's lazily-built buffer —
-    * but BUILDING the frame runs ZERO jobs. That property is what the
-    * composite rehearsals (dry-run) require of every stage they plan:
-    * [[graft.operators.Climate.featureCollectionSharded]] sits inside
-    * the rehearsed pipelines, and an eager checkpoint there turned
-    * "walk every plan without launching query work" into a stealth
-    * materialization. Cost of the trade: the pinned layout stays in
-    * the block-manager cache (MEMORY_AND_DISK) for the plan's lifetime
-    * instead of being truncated from lineage. */
+    * but BUILDING the frame runs ZERO jobs. Dry-run plans the real
+    * climate composites, so every stage inside them must build without
+    * launching work: [[graft.operators.Climate.featureCollection]] sits
+    * inside both document pipelines, and an eager checkpoint there
+    * would turn "walk every plan without launching query work" into a
+    * stealth materialization. Cost of the trade: the pinned layout
+    * stays in the block-manager cache (MEMORY_AND_DISK) for the plan's
+    * lifetime instead of being truncated from lineage. */
   def withGroupedPrefixSumLazy(df: DataFrame, grpCol: String, valueCol: Column,
       out: String, sortCols: Column*): DataFrame =
     groupedPrefixSum(df, grpCol, valueCol, out, sortCols, eagerPin = false)

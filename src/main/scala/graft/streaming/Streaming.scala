@@ -158,21 +158,15 @@ object Streaming {
 
   /** Streaming FeatureCollection sink: each micro-batch's feature rows
     * are assembled into per-(year,month) document PARTS by the same
-    * bounded sharded plan as batch ([[graft.operators.Climate
-    * .featureCollectionSharded]]) and appended under hive (year,month)
+    * bounded plan as batch ([[graft.operators.Climate
+    * .featureCollection]]) and appended under hive (year,month)
     * partitions with their batch id. A month's logical document is the
     * concatenation of its parts in (batch_id, shard) order — the
     * streaming form of the sharded contract: no single collected value
     * ever exceeds `maxPerDoc` features, regardless of how large a
-    * month grows across an unbounded stream.
-    *
-    * The SHARDED plan is used unconditionally (not the adaptive
-    * statistic route): a micro-batch is only a slice of the month, so
-    * a per-batch count proves nothing about the month's eventual size —
-    * the bounded plan is the only one whose guarantee survives
-    * accumulation. Expects `year`, `month`, the feature column, and a
-    * within-month-unique order column on the input (the batch
-    * assembly's own precondition). */
+    * month grows across an unbounded stream. Expects `year`, `month`,
+    * the feature column, and a within-month-unique order column on the
+    * input (the batch assembly's own precondition). */
   def shardedCollectionSink(stream: DataFrame, featureCol: String,
       orderCol: String, maxPerDoc: Int, outDir: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
@@ -180,7 +174,7 @@ object Streaming {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         graft.operators.Climate
-          .featureCollectionSharded(batch, featureCol, orderCol, maxPerDoc)
+          .featureCollection(batch, featureCol, orderCol, maxPerDoc)
           .withColumn("batch_id", lit(id))
           .write.mode("append").partitionBy("year", "month").parquet(outDir)
       }
@@ -196,7 +190,7 @@ object Streaming {
   def writeShardedBatch(batch: DataFrame, batchId: Long, featureCol: String,
       orderCol: String, maxPerDoc: Int, outDir: String): Unit =
     graft.operators.Climate
-      .featureCollectionSharded(batch, featureCol, orderCol, maxPerDoc)
+      .featureCollection(batch, featureCol, orderCol, maxPerDoc)
       .withColumn("batch_id", lit(batchId))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.operators.Climate
+import graft.operators.{Climate, PipelineManager}
 
 /** Climate composites: golden-file feature construction, land-mask
   * semantics on planted cells, and the end-to-end partitioned-sink
@@ -82,12 +82,12 @@ class ClimateSpec extends SparkTestBase {
     assert(r.getDouble(0) == 0.5 && r.getDouble(1) == 0.625)
   }
 
-  test("featureCollectionSharded: oversized months split, in-bound months byte-identical") {
+  test("featureCollection: oversized months split into bounded, reassemblable parts") {
     // month 1 has 5 features, month 2 has 2; bound = 2
     val df = (1L to 5L).map(i => (2024, 1, i, s"""{"f":$i}""")) ++
       Seq((2024, 2, 6L, """{"f":6}"""), (2024, 2, 7L, """{"f":7}"""))
     val feats = df.toDF("year", "month", "event_id", "feature")
-    val sharded = Climate.featureCollectionSharded(feats, "feature", "event_id", 2)
+    val sharded = Climate.featureCollection(feats, "feature", "event_id", 2)
       .orderBy(col("year"), col("month"), col("shard"))
       .collect().map(r => (r.getInt(1), r.getInt(2), r.getString(3))).toSeq
     // an oversized month splits into ceil(5/2)=3 contiguously-numbered parts
@@ -102,53 +102,20 @@ class ClimateSpec extends SparkTestBase {
     // the unsharded document exactly
     def stripEnvelope(doc: String) = doc
       .stripPrefix("""{"type":"FeatureCollection","features":[""").stripSuffix("]}")
-    val unsharded = Climate.featureCollectionSharded(feats, "feature", "event_id", 100)
+    val unsharded = Climate.featureCollection(feats, "feature", "event_id", 100)
       .orderBy(col("year"), col("month"))
       .collect().map(r => (r.getInt(1), r.getInt(2), r.getString(3))).toSeq
     val reassembled = sharded.groupBy(_._1).view.mapValues(
       _.sortBy(_._2).map(t => stripEnvelope(t._3)).mkString(",")).toMap
     assert(reassembled == unsharded.map(t => t._1 -> stripEnvelope(t._3)).toMap)
-    // in-bound months: ONE shard (index 0), byte-identical to the
-    // default (bounded) featureCollection path
+    // in-bound months: ONE shard (index 0)
     assert(unsharded.forall(_._2 == 0))
-    val plain = Climate.featureCollection(feats, "feature", "event_id")
-      .orderBy(col("year"), col("month"))
-      .collect().map(r => (r.getInt(1), r.getInt(2), r.getString(3))).toSeq
-    assert(plain == unsharded)
-    // the adaptive default path degrades an out-of-bound month into
-    // NUMBERED document parts (the shard index survives the route, so
-    // callers can reassemble) instead of one oversized row
-    val degraded = Climate.featureCollection(feats, "feature", "event_id", maxPerDoc = 2)
-      .collect().map(r => (r.getInt(1), r.getInt(2))).toSeq
-    assert(degraded.filter(_._1 == 1).map(_._2).sorted == Seq(0, 1, 2))
-    assert(degraded.filter(_._1 == 2).map(_._2) == Seq(0))
   }
 
-  test("featureCollection routing statistic invalidates when the path is rewritten") {
-    val dir = Files.createTempDirectory("graft_fc_cache").toString + "/feats"
-    def write(n: Int): Unit = (1 to n).map(i => (2024, 1, i.toLong, s"""{"f":$i}"""))
-      .toDF("year", "month", "event_id", "feature")
-      .write.mode("overwrite").parquet(dir)
-    // 2 features, bound 2 → in-bound route, one shard-0 document
-    write(2)
-    val small = Climate.featureCollection(
-      spark.read.parquet(dir), "feature", "event_id", maxPerDoc = 2)
-      .collect().map(_.getInt(2)).toSeq
-    assert(small == Seq(0))
-    // overwrite the SAME path with 5 features: a stale largest-month
-    // statistic would route through the unbounded in-memory plan — the
-    // fingerprinted memo must recount and take the sharded route
-    write(5)
-    val large = Climate.featureCollection(
-      spark.read.parquet(dir), "feature", "event_id", maxPerDoc = 2)
-      .collect().map(_.getInt(2)).sorted.toSeq
-    assert(large == Seq(0, 1, 2))
-  }
-
-  test("featureCollectionSharded: distributed rank, no whole-month window") {
+  test("featureCollection: distributed rank, no whole-month window") {
     val feats = (1L to 100L).map(i => (2024, 1, i, s"f$i"))
       .toDF("year", "month", "event_id", "feature")
-    val plan = Climate.featureCollectionSharded(feats, "feature", "event_id", 10)
+    val plan = Climate.featureCollection(feats, "feature", "event_id", 10)
       .queryExecution.executedPlan.toString
     // The rank must come from the grouped prefix sum: every Window in
     // the plan is partitioned by (_pid, group) or runs on the tiny
@@ -204,9 +171,10 @@ class ClimateSpec extends SparkTestBase {
     assert(Climate.isEmptyRelation(li.filter(col("l_quantity") < -1)))
   }
 
-  test("climatePipeline: one lazy plan to a hive (year,month) layout") {
-    val out = Files.createTempDirectory("graft_e2e").toString
-    Climate.climatePipeline(spark, sf, out)
+  test("precipitation pipeline: one lazy plan to a hive (year,month) layout") {
+    val root = Files.createTempDirectory("graft_e2e").toString
+    assert(PipelineManager.runClimatePipelines(spark, sf, root).allSucceeded)
+    val out = s"$root/precipitation"
     val back = spark.read.parquet(out)
     assert(back.columns.sorted.toSeq == Seq("feature", "month", "year"))
     val n = back.count()

@@ -1,13 +1,39 @@
 package graft
 
 import java.nio.file.Files
-import graft.operators.PipelineManager
+import graft.operators.{Climate, PipelineManager}
 
 /** Multi-pipeline orchestration semantics
   * (utils/pipeline_manager.py:224-257): concurrent execution on one
   * session, per-pipeline success tally, continue-on-failure.
   */
 class OrchestrationSpec extends SparkTestBase {
+
+  /** Runs `body` under its own job group and returns its result with
+    * the names of the stages it launched. A sentinel job in a second
+    * group runs after `body`; the status store applies listener events
+    * in order, so once the sentinel is visible every job `body` launched
+    * is visible too — an empty answer cannot come from events still in
+    * flight. */
+  private def stagesLaunchedBy[T](body: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val tracker = sc.statusTracker
+    val id = java.util.UUID.randomUUID().toString
+    def stages(group: String): Seq[String] =
+      tracker.getJobIdsForGroup(group).toSeq.flatMap(j =>
+        tracker.getJobInfo(j).toSeq.flatMap(_.stageIds().toSeq)).flatMap(s =>
+        tracker.getStageInfo(s).toSeq.map(_.name()))
+    sc.setJobGroup(s"graft-body-$id", "body under test", interruptOnCancel = false)
+    val result = try body finally sc.clearJobGroup()
+    sc.setJobGroup(s"graft-sentinel-$id", "sentinel", interruptOnCancel = false)
+    try spark.range(10).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime + 10e9.toLong
+    while (stages(s"graft-sentinel-$id").isEmpty && System.nanoTime < deadline)
+      Thread.sleep(50)
+    assert(stages(s"graft-sentinel-$id").nonEmpty,
+      "sentinel job invisible — an empty stage list would be vacuous")
+    (result, stages(s"graft-body-$id"))
+  }
 
   test("runClimatePipelines: all three composites land concurrently on one session") {
     val out = Files.createTempDirectory("graft_orch").toString
@@ -18,7 +44,7 @@ class OrchestrationSpec extends SparkTestBase {
       assert(n > 0, s"$p wrote no rows")
     }
     // humidity output carries its validation columns end-to-end (plus
-    // the route-stable shard index of the adaptive document assembly)
+    // the shard index of the bounded document assembly)
     val hum = spark.read.parquet(s"$out/humidity")
     assert(hum.columns.sorted.toSeq ==
       Seq("collection", "month", "n_features", "shard", "valid", "year"))
@@ -169,27 +195,31 @@ class OrchestrationSpec extends SparkTestBase {
   }
 
   test("dryRunClimatePipelines rehearses all three reference pipelines, ZERO query jobs") {
-    // the composites' adaptive document route computes a real routing-
-    // statistic job — the rehearsal must take the sharded route instead,
-    // so the SAME zero-query-jobs property pinned for dryRunAll holds
-    // for the full three-pipeline rehearsal too
-    val group = "graft-dryrun-climate-zero-jobs"
-    val tracker = spark.sparkContext.statusTracker
-    def stageNames(): Seq[String] =
-      tracker.getJobIdsForGroup(group).toSeq.flatMap(j =>
-        tracker.getJobInfo(j).toSeq.flatMap(_.stageIds().toSeq)).flatMap(s =>
-        tracker.getStageInfo(s).toSeq.map(_.name()))
-    spark.sparkContext.setJobGroup(group, "climate dry-run spec", interruptOnCancel = false)
-    val (summary, plans) =
-      try PipelineManager.dryRunClimatePipelines(spark, sf)
-      finally spark.sparkContext.clearJobGroup()
+    // the SAME zero-query-jobs property pinned for dryRunAll holds for
+    // the full three-pipeline rehearsal, over the very frames the real
+    // run writes
+    val ((summary, plans), metadataOnly) =
+      stagesLaunchedBy(PipelineManager.dryRunClimatePipelines(spark, sf))
     assert(summary.allSucceeded && summary.successCount == 3, summary)
     assert(plans.keySet == Set("precipitation", "temperature", "humidity"))
     // each rendered physical plan reaches its source scans
     assert(plans.values.forall(_.contains("Scan")))
-    val metadataOnly = stageNames()
     assert(metadataOnly.forall(_.startsWith("parquet at")),
       s"climate dry-run launched query work: $metadataOnly")
+  }
+
+  test("building the temperature/humidity composites launches no query job") {
+    // construction resolves and plans only: parquet footer reads (source
+    // schema resolution) are the one cluster activity allowed — the
+    // document stage has a single plan, so nothing is counted before
+    // the frame is handed back
+    val dir = java.nio.file.Paths.get(sf).resolveSibling("sf0.1").toString
+    val (_, stages) = stagesLaunchedBy {
+      Climate.temperatureComposite(spark, dir)
+      Climate.humidityComposite(spark, dir)
+    }
+    assert(stages.forall(_.startsWith("parquet at")),
+      s"building a composite launched query work: $stages")
   }
 
   test("an injected failure is tallied and does NOT stop sibling pipelines") {

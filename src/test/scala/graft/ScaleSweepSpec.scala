@@ -243,7 +243,7 @@ class ScaleSweepSpec extends AnyFunSuite {
          ||---|---|
          |$artRows
          |""".stripMargin
-    SoakDoc.upsert(java.nio.file.Paths.get("SOAK.md"),
+    SoakDoc.upsert(SoakDoc.Path,
       "Full-registry sf1 sweep", section)
   }
 }

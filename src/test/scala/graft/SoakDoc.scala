@@ -1,8 +1,12 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 
 /** Section-scoped writer for `SOAK.md`.
+  *
+  * The soak suites write to [[Path]], under the build's `target/`, so a
+  * plain test run leaves the tracked `SOAK.md` untouched; promoting a
+  * run's evidence is an explicit copy of that file over `SOAK.md`.
   *
   * Each soak suite owns exactly ONE named section and may only replace
   * that section; every sibling section is preserved byte-for-byte. This
@@ -19,6 +23,9 @@ import java.nio.file.{Files, Path}
   * than dropped — merge-on-write never loses evidence.
   */
 object SoakDoc {
+
+  /** Where the soak suites record their sections. */
+  val Path: Path = Paths.get("target", "SOAK.md")
 
   /** Canonical section order; `upsert` refuses names not listed here so
     * a typo cannot silently fork a duplicate section. */
@@ -76,6 +83,7 @@ object SoakDoc {
     require(Order.contains(name), s"unknown soak section: $name (known: ${Order.mkString(", ")})")
     require(keyOf(body.strip.linesIterator.next()) == name,
       s"section body must start with a heading for '$name'")
+    Files.createDirectories(path.toAbsolutePath.getParent)
     val existing = if (Files.exists(path)) Files.readString(path) else ""
     val merged = (sections(existing).filterNot(_._1 == name) :+ (name -> body))
       .sortBy { case (k, _) =>

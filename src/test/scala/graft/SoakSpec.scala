@@ -11,13 +11,13 @@ import graft.operators.{Climate, Dedup, Windows}
   * primitives whose scale story depends on NOT collapsing to a
   * whole-relation single-task stage:
   * `withGlobalPrefixSum`, `equiHeightHistogram`,
-  * `featureCollectionSharded` (maxPerDoc forcing multi-shard months),
+  * `featureCollection` (maxPerDoc forcing multi-shard months),
   * and `monthlyResolutions`. A stage listener proves the property the
   * plans only suggest: across every job here, NO stage with one task
   * reads more than a trivial number of shuffle records — the big
   * shuffles all fan out, and the only single-task stages are the
   * ≤shuffle-partitions-row offset/statistic aggregates. Wall-times are
-  * recorded into SOAK.md via [[SoakDoc.upsert]] — each suite replaces
+  * recorded into [[SoakDoc.Path]] via [[SoakDoc.upsert]] — each suite replaces
   * ONLY its own section, so a partial run can never drop a sibling
   * suite's evidence.
   */
@@ -142,7 +142,7 @@ class SoakSpec extends SparkTestBase {
         .select(col("year"), col("month"), col("event_id"),
           concat(lit("{\"id\":"), col("event_id"), lit("}")).as("feature"))
       val (shards, tShard) = timed {
-        Climate.featureCollectionSharded(feats, "feature", "event_id", 20000)
+        Climate.featureCollection(feats, "feature", "event_id", 20000)
           .select(col("year"), col("month"), col("shard"),
             length(col("collection")).as("len")).collect()
       }
@@ -212,11 +212,11 @@ class SoakSpec extends SparkTestBase {
            || withGlobalPrefixSum (ts,event_id order) | ${n / 1000000.0}M | ${f"$tPrefix%.1f"} | ${f"$ratio%.2f"} |
            || withGroupedPrefixSum (80%-dominant stratum) | ${n / 1000000.0}M | ${f"$tGrouped%.1f"} | ${f"$ratio%.2f"} |
            || equiHeightHistogram (16 buckets) | ${n / 1000000.0}M | ${f"$tHist%.1f"} | ${f"$ratio%.2f"} |
-           || featureCollectionSharded (20k/doc → ${Copies * 5} parts) | ${n / 1000000.0}M | ${f"$tShard%.1f"} | ${f"$ratio%.2f"} |
+           || featureCollection (20k/doc → ${Copies * 5} parts) | ${n / 1000000.0}M | ${f"$tShard%.1f"} | ${f"$ratio%.2f"} |
            || monthlyResolutions (2 axes × $Copies months) | ${n / 1000000.0}M | ${f"$tRes%.1f"} | ${f"$ratio%.2f"} |
            || interpolateGaps (64 series, incremental frames) | ${n / 1000000.0}M | ${f"$tInterp%.1f"} | ${f"$ratio%.2f"} |
            |""".stripMargin
-      SoakDoc.upsert(java.nio.file.Paths.get("SOAK.md"),
+      SoakDoc.upsert(SoakDoc.Path,
         "Distributed-primitive soak", doc)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
@@ -292,7 +292,7 @@ class SoakSpec extends SparkTestBase {
            |single-task shuffle read across the whole fixpoint:
            |${maxSingle / 1024} KB (budget ${SingleTaskShuffleBudget / 1024 / 1024} MB).
            |""".stripMargin
-      SoakDoc.upsert(java.nio.file.Paths.get("SOAK.md"),
+      SoakDoc.upsert(SoakDoc.Path,
         "Connected-components fixpoint", section)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
@@ -393,7 +393,7 @@ class SoakSpec extends SparkTestBase {
            |${f"$ratio%.2f"}) on local[4]. Same listener invariant as
            |above: no single-task stage read a relation-sized shuffle.
            |""".stripMargin
-      SoakDoc.upsert(java.nio.file.Paths.get("SOAK.md"),
+      SoakDoc.upsert(SoakDoc.Path,
         "Incremental dedup soak", section)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
@@ -463,7 +463,7 @@ class SoakSpec extends SparkTestBase {
            |local[4]. No single-task stage read a relation-sized
            |shuffle.
            |""".stripMargin
-      SoakDoc.upsert(java.nio.file.Paths.get("SOAK.md"),
+      SoakDoc.upsert(SoakDoc.Path,
         "Span dedup soak", section)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
@@ -542,7 +542,7 @@ class SoakSpec extends SparkTestBase {
            |argmax is a 1-row TakeOrdered; no single-task stage read a
            |relation-sized shuffle.
            |""".stripMargin
-      SoakDoc.upsert(java.nio.file.Paths.get("SOAK.md"),
+      SoakDoc.upsert(SoakDoc.Path,
         "BPE training soak", section)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
@@ -626,7 +626,7 @@ class SoakSpec extends SparkTestBase {
            |broadcast-join + partial aggregate; no single-task stage
            |read a relation-sized shuffle.
            |""".stripMargin
-      SoakDoc.upsert(java.nio.file.Paths.get("SOAK.md"),
+      SoakDoc.upsert(SoakDoc.Path,
         "ANN / IVF-PQ soak", section)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
@@ -816,7 +816,7 @@ class SoakSpec extends SparkTestBase {
            || nullSafeJoin shuffle-hash (NULL skew) | 3.0M | ${f"$tShuf%.1f"} | ${f"$ratio%.2f"} |
            || payloadDedupStats | 3.0M | ${f"$tStats%.1f"} | ${f"$ratio%.2f"} |
            |""".stripMargin
-      SoakDoc.upsert(java.nio.file.Paths.get("SOAK.md"),
+      SoakDoc.upsert(SoakDoc.Path,
         "Round-9 newcomer soak", section)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
@@ -1011,7 +1011,7 @@ class SoakSpec extends SparkTestBase {
            || coalesceIntervals (100k users) | 3.0M | ${f"$tIv%.1f"} | ${f"$ratio%.2f"} |
            || rollingActiveUsers (1M users) | 3.0M | ${f"$tAu%.1f"} | ${f"$ratio%.2f"} |
            |""".stripMargin
-      SoakDoc.upsert(java.nio.file.Paths.get("SOAK.md"),
+      SoakDoc.upsert(SoakDoc.Path,
         "Round-10 newcomer soak", section)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
@@ -1232,7 +1232,7 @@ class SoakSpec extends SparkTestBase {
            || bitmapDistinct (3×1M distinct) | 3.0M | ${f"$tBm%.1f"} | ${f"$ratio%.2f"} |
            || negativeSample (99/1 skew) | 1.0M | ${f"$tNeg%.1f"} | ${f"$ratio%.2f"} |
            |""".stripMargin
-      SoakDoc.upsert(java.nio.file.Paths.get("SOAK.md"),
+      SoakDoc.upsert(SoakDoc.Path,
         "Round-11 adversarial soak", section)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
@@ -1386,7 +1386,7 @@ class SoakSpec extends SparkTestBase {
            || holtTrend (1k series × 3k days) | 3.0M | ${f"$tHt%.1f"} | ${f"$ratio%.2f"} |
            || vocabGrowth (300k docs) | 0.3M | ${f"$tVg%.1f"} | ${f"$ratio%.2f"} |
            |""".stripMargin
-      SoakDoc.upsert(java.nio.file.Paths.get("SOAK.md"),
+      SoakDoc.upsert(SoakDoc.Path,
         "Round-11 newcomer soak", section)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
@@ -1574,7 +1574,7 @@ class SoakSpec extends SparkTestBase {
            || weeklySeasonality (1k pure-weekly series) | 2.8M | ${f"$tSea%.1f"} | ${f"$ratio%.2f"} |
            || dedupContainment (75k planted pairs) | 150k docs | ${f"$tCont%.1f"} | ${f"$ratio%.2f"} |
            |""".stripMargin
-      SoakDoc.upsert(java.nio.file.Paths.get("SOAK.md"),
+      SoakDoc.upsert(SoakDoc.Path,
         "Round-11 late-newcomer soak", section)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
@@ -1731,7 +1731,7 @@ class SoakSpec extends SparkTestBase {
            || kCorePeel (100k triangles + 100k path) | 400k edges | ${f"$tKc%.1f"} | ${f"$ratio%.2f"} |
            || monthlyGrowth (5 prios × 119 months) | ~3.0M | ${f"$tGr%.1f"} | ${f"$ratio%.2f"} |
            |""".stripMargin
-      SoakDoc.upsert(java.nio.file.Paths.get("SOAK.md"),
+      SoakDoc.upsert(SoakDoc.Path,
         "Round-11 close-out soak", section)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
@@ -2025,7 +2025,7 @@ class SoakSpec extends SparkTestBase {
            || twoHopRecs (200k path) | 200k edges | ${f"$tTh%.1f"} | ${f"$ratio%.2f"} |
            || gumbelExtremes (1k series × 24 blocks) | 3.0M | ${f"$tGu%.1f"} | ${f"$ratio%.2f"} |
            |""".stripMargin
-      SoakDoc.upsert(java.nio.file.Paths.get("SOAK.md"),
+      SoakDoc.upsert(SoakDoc.Path,
         "Round-11 final-newcomer soak", section)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
@@ -2095,7 +2095,7 @@ class SoakSpec extends SparkTestBase {
              ||---|---|---|---|---|---|---|
              || transformWithState running totals | 3.0M | 100k | 5 | ${f"$memMb%.0f"} | ${f"$wall%.1f"} | ${f"$ratio%.2f"} |
              |""".stripMargin
-        SoakDoc.upsert(java.nio.file.Paths.get("SOAK.md"),
+        SoakDoc.upsert(SoakDoc.Path,
           "Streaming RocksDB state soak", section)
       } finally {
         q.stop()
@@ -2173,7 +2173,7 @@ class SoakSpec extends SparkTestBase {
            |Same listener invariant as above:
            |no single-task stage read a relation-sized shuffle.
            |""".stripMargin
-      SoakDoc.upsert(java.nio.file.Paths.get("SOAK.md"),
+      SoakDoc.upsert(SoakDoc.Path,
         "Zarr connector soak", section)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
@@ -2256,7 +2256,7 @@ class SoakSpec extends SparkTestBase {
            |rejected text. Same listener invariant as above: no
            |single-task stage read a relation-sized shuffle.
            |""".stripMargin
-      SoakDoc.upsert(java.nio.file.Paths.get("SOAK.md"),
+      SoakDoc.upsert(SoakDoc.Path,
         "Staged malformed split soak", section)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
@@ -2499,7 +2499,7 @@ class SoakSpec extends SparkTestBase {
            || countOfCounts (sizes 1..7 × 100k) | 2.8M | ${f"$tCoc%.1f"} | ${f"$ratio%.2f"} |
            || kCenterSelect (200k × dim 8) | 0.2M | ${f"$tKc%.1f"} | ${f"$ratio%.2f"} |
            |""".stripMargin
-      SoakDoc.upsert(java.nio.file.Paths.get("SOAK.md"),
+      SoakDoc.upsert(SoakDoc.Path,
         "Round-12 newcomer soak", section)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
@@ -2681,7 +2681,7 @@ class SoakSpec extends SparkTestBase {
            |a 1-of-6 t-slice prunes to 500 partitions
            |(cal ratio ${f"$ratio%.2f"}).
            |""".stripMargin
-      SoakDoc.upsert(java.nio.file.Paths.get("SOAK.md"),
+      SoakDoc.upsert(SoakDoc.Path,
         "Round-14 newcomer soak", section)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
