@@ -90,16 +90,23 @@ object Aggregations {
     * identically). Lower weighted median convention: first value (in
     * (value, tiebreak) order) whose running weight ≥ total/2.
     *
-    * The running weight comes from [[Windows.withGroupedPrefixSum]]
-    * (range repartition on (group, value, tiebreak) + per-(partition,
-    * group) local sums + broadcast offsets), NOT a group-partitioned
+    * The running weight and the group total come from
+    * [[Windows.prefixSums]] (range repartition on (group, value,
+    * tiebreak) + per-(partition, group) local sums + broadcast offsets,
+    * totals from the same partials), NOT a group-partitioned
     * ordered window: the naive window moves each group to ONE task,
     * so a low-cardinality stratum column (3 return flags over a 100 TB
     * fact table) serializes the whole sort onto 3 cores — 8.2 → 6.4 s
     * at sf1/local[8] (modest there; the point is structural: task
     * parallelism now scales with partitions, not stratum count). The
-    * total is a plain hash aggregate broadcast back; the
-    * qualifying-suffix min is unchanged.
+    * total is broadcast back; the qualifying-suffix min is unchanged.
+    *
+    * EXACTNESS CONTRACT: every weight must be integer-valued (counts,
+    * units, cents — any numeric type). Running and total mass are sums
+    * of per-partition partials, exact only in integer arithmetic, so a
+    * fractional weight could move the half-mass boundary with the
+    * partitioning; one fails the query through `raise_error` naming the
+    * weight column. Scale fractional weights to integers first.
     *
     * Degenerate inputs: weights are assumed non-negative (negative
     * mass makes the running weight non-monotone and the "half the
@@ -110,15 +117,12 @@ object Aggregations {
       tiebreak: Seq[org.apache.spark.sql.Column]): DataFrame = {
     val tb = tiebreak.zipWithIndex.map { case (c, i) => c.as(s"_tb$i") }
     val tbCols = tiebreak.indices.map(i => col(s"_tb$i"))
-    val base = df.select((group.as("grp") +: value.as("v") +: weight.as("w") +: tb): _*)
-    // totals ride out of the prefix-sum machinery's own partials (r17:
-    // the separate base.groupBy(sum) re-ran the whole input chain once
-    // more per query). Exactness: the harness weight (l_quantity) is
-    // integer-valued, so the partial-sum reassociation is bit-exact —
-    // see withGroupedPrefixSumAndTotals' contract.
-    val (cum, tots) = Windows.withGroupedPrefixSumAndTotals(base, "grp",
-      col("w"), "cum", (col("v") +: tbCols): _*)
-    val tot = tots.select(col("grp"), col("_tot").as("tot"))
+    val mass = when(weight.isNull || weight === floor(weight), weight.cast("long"))
+      .otherwise(raise_error(lit(s"weightedMedian: weight $weight must be integer-valued")))
+    val base = df.select((group.as("grp") +: value.as("v") +: mass.as("w") +: tb): _*)
+    val (cum, tots) = Windows.prefixSums(base, Seq("grp"),
+      Seq(col("w") -> "cum"), col("v") +: tbCols)
+    val tot = tots.select(col("grp"), col("cum").as("tot"))
     cum.join(broadcast(tot), "grp")
       .filter(col("cum") >= col("tot") / 2.0)
       .groupBy(col("grp"))
@@ -229,7 +233,7 @@ object Aggregations {
     * and revenue-concentration QA): G = 2·Σᵢ i·xᵢ / (n·Σx) − (n+1)/n
     * over ascending-ranked values.
     *
-    * The per-group rank is [[Windows.withGroupedPrefixSum]] of 1 (the
+    * The per-group rank is [[Windows.prefixSums]] of 1 (the
     * distributed per-group row number), not a group-partitioned
     * window — same rationale as [[weightedMedian]]: a dominant
     * stratum must never serialize onto one task. The Σ-reduction is
@@ -240,8 +244,8 @@ object Aggregations {
     val tb = tiebreak.zipWithIndex.map { case (c, i) => c.as(s"_tb$i") }
     val tbCols = tiebreak.indices.map(i => col(s"_tb$i"))
     val base = df.select((group.as("grp") +: value.as("v") +: tb): _*)
-    Windows.withGroupedPrefixSum(base, "grp", lit(1L), "rn",
-        (col("v") +: tbCols): _*)
+    Windows.prefixSums(base, Seq("grp"), Seq(lit(1L) -> "rn"),
+        col("v") +: tbCols)._1
       .groupBy(col("grp"))
       .agg(count(lit(1)).as("n"),
         round(lit(2.0) * sum(col("rn") * col("v")) /
@@ -457,7 +461,7 @@ object Aggregations {
     *
     * Scale posture: one hash aggregate collapses the facts to
     * entity-sized cents; the global descending rank is the
-    * distributed prefix sum ([[Windows.withGlobalRowNumber]] — range
+    * distributed prefix sum ([[Windows.prefixSums]] of 1 — range
     * repartition + broadcast offsets, no single-task window); the
     * decile rollup is a 10-row table whose triangular cumulation is
     * a broadcast nested-loop over ≤ tiles rows. */
@@ -466,8 +470,8 @@ object Aggregations {
       .agg(sum(floor(col("o_totalprice") * lit(100.0) + lit(0.5))
         .cast("long")).as("cents"))
     val nt = rev.agg(count(lit(1)).as("n"), sum(col("cents")).as("tot"))
-    val dec = Windows.withGlobalRowNumber(rev, "rn",
-        col("cents").desc, col("cust"))
+    val dec = Windows.prefixSums(rev, Nil, Seq(lit(1L) -> "rn"),
+        Seq(col("cents").desc, col("cust")))._1
       .crossJoin(broadcast(nt))
       .withColumn("decile", expr(s"((rn - 1L) * $tiles) div n") + lit(1L))
       .groupBy(col("decile"))
@@ -516,12 +520,11 @@ object Aggregations {
       .groupBy(col("grp"), col("o_custkey").as("cust"))
       .agg(sum(floor(col("o_totalprice") * lit(100.0) + lit(0.5))
         .cast("long")).as("cents"))
-    // totals/counts from the prefix-sum partials (r17): the separate
-    // rev.groupBy re-ran the orders×customer join + aggregate once
-    // more per query; cents are longs — exact under any association
-    val (cum, tots) = Windows.withGroupedPrefixSumAndTotals(rev, "grp",
-      col("cents"), "cum", col("cents").desc, col("cust"))
-    val tot = tots.select(col("grp"), col("_tot").as("tot"), col("_n").as("n"))
+    // totals/counts from the prefix-sum partials: a separate
+    // rev.groupBy would re-run the orders×customer join + aggregate
+    val (cum, tots) = Windows.prefixSums(rev, Seq("grp"),
+      Seq(col("cents") -> "cum"), Seq(col("cents").desc, col("cust")))
+    val tot = tots.select(col("grp"), col("cum").as("tot"), col("_n").as("n"))
     cum.join(broadcast(tot), Seq("grp"))
       .filter(col("cum") - col("cents") <
         expr(s"(tot * $pct + 99) div 100"))
@@ -582,7 +585,7 @@ object Aggregations {
     * form never buffers — a dominant group spans tasks under the
     * distributed per-group rank.
     *
-    * Scale posture: ranks via [[Windows.withGroupedPrefixSum]] of 1
+    * Scale posture: ranks via [[Windows.prefixSums]] of 1
     * (range repartition + broadcast offsets — no group-partitioned
     * window, no per-group state); the four cut ranks are integer
     * arithmetic (⌈q·n⌉ = (n·p + 99) div 100 — no float boundary) on
@@ -597,11 +600,10 @@ object Aggregations {
     val tb = tiebreak.zipWithIndex.map { case (c, i) => c.as(s"_tb$i") }
     val tbCols = tiebreak.indices.map(i => col(s"_tb$i"))
     val base = df.select((group.as("grp") +: value.as("v") +: tb): _*)
-    // group counts come from the rank machinery's own partials (r17:
-    // the separate base.groupBy(count) re-scanned the fact table once
-    // more per query); long sums — exact under any association
-    val (ranked, tots) = Windows.withGroupedPrefixSumAndTotals(base, "grp",
-      lit(1L), "rn", (col("v") +: tbCols): _*)
+    // group counts come from the rank layout's own partials: a
+    // separate base.groupBy(count) would re-scan the fact table
+    val (ranked, tots) = Windows.prefixSums(base, Seq("grp"),
+      Seq(lit(1L) -> "rn"), col("v") +: tbCols)
     val counts = tots.select(col("grp"), col("_n").as("n"))
     // ⌈p·n/100⌉ in pure integer arithmetic (div, not /): a float
     // quotient at an exact-integer boundary is the classic off-by-one
@@ -672,7 +674,7 @@ object Aggregations {
     * Scale posture: one (arm, user) hash aggregate, one (value) grid
     * aggregate (ties collapse — the shuffle carries distinct metric
     * values, not users), then the distributed global prefix sum
-    * ([[Windows.withGlobalPrefixSum]]: range repartition + broadcast
+    * ([[Windows.prefixSums]]: range repartition + broadcast
     * offsets — no single-task whole-relation window) assigns ranks,
     * and a final 1-row fold does the algebra. */
   def mannWhitney(events: DataFrame, arm: org.apache.spark.sql.Column,
@@ -684,7 +686,8 @@ object Aggregations {
       .agg(sum(when(col("arm") === 0, 1L).otherwise(0L)).as("ta"),
         sum(when(col("arm") === 1, 1L).otherwise(0L)).as("tb"))
       .withColumn("t", col("ta") + col("tb"))
-    val ranked = Windows.withGlobalPrefixSum(grid, col("t"), "cum", col("v"))
+    val (ranked, _) = Windows.prefixSums(grid, Nil, Seq(col("t") -> "cum"),
+      Seq(col("v")))
     // doubled average rank of a tie group: 2·(exclusive prefix) + t + 1
     val dr = (col("cum") - col("t")) * 2L + col("t") + 1L
     val a = ranked.agg(

@@ -356,8 +356,8 @@ object Climate {
     * Scale posture: ONE plan for every month size, with nothing
     * counted ahead of it — building the frame launches no query job.
     * The per-month rank comes from the DISTRIBUTED grouped prefix sum
-    * (range repartition + broadcast offsets,
-    * [[Windows.withGroupedPrefixSumLazy]]), NOT a (year,month)-
+    * (range repartition + broadcast offsets, [[Windows.prefixSums]]
+    * with its lazy pin), NOT a (year,month)-
     * partitioned window — the sf1 sweep caught the window form
     * absorbing a whole single-month relation into ONE task (the harness
     * stream spans one month, so "per-month" parallelism is no
@@ -373,9 +373,9 @@ object Climate {
       orderCol: String, maxPerDoc: Int = MaxFeaturesPerDoc): DataFrame = {
     // lazy-pin form: dry-run plans the real composites, and the dry-run
     // contract is zero query jobs at build time
-    val ranked = Windows.withGroupedPrefixSumLazy(
+    val (ranked, _) = Windows.prefixSums(
       df.withColumn("_ym", concat_ws("-", col("year"), col("month"))),
-      "_ym", lit(1L), "_rnk", col(orderCol))
+      Seq("_ym"), Seq(lit(1L) -> "_rnk"), Seq(col(orderCol)), lazyPin = true)
     ranked
       .withColumn("shard", ((col("_rnk") - 1) / maxPerDoc).cast("int"))
       .groupBy(col("year"), col("month"), col("shard"))
@@ -546,23 +546,20 @@ object Climate {
     * ⌈N/buckets⌉ rows.
     *
     * Scale posture: NO single-task global window — the global row
-    * number comes from [[Windows.withGlobalRowNumber]] (range
-    * repartition + per-partition row_number + broadcast offsets), the
-    * total count from a broadcast 1-row aggregate, and the bucket id is
-    * pure integer arithmetic, so the heavy stages stay fully parallel.
+    * number and the total count come from one [[Windows.prefixSums]]
+    * layout (range repartition + per-partition running count +
+    * broadcast offsets; the count from the same partials), and the
+    * bucket id is pure integer arithmetic, so the heavy stages stay
+    * fully parallel.
     * `tiebreak` must be unique for a deterministic split of equal
     * values. */
   def equiHeightHistogram(df: DataFrame, valueCol: String, tiebreak: String,
       buckets: Int): DataFrame = {
-    val base = df.filter(col(valueCol).isNotNull)
-    Windows.withGlobalRowNumber(base, "rn", col(valueCol), col(tiebreak))
-      .crossJoin(broadcast(base.agg(count(lit(1)).as("n_total"))))
-      .withColumn("q", expr(s"n_total div $buckets"))
-      .withColumn("r", expr(s"n_total % $buckets"))
-      .withColumn("bucket",
-        expr(s"""IF(rn <= r * (q + 1),
-                   (rn + q) div (q + 1),
-                   r + (rn - r * (q + 1) + q - 1) div q)""").cast("int"))
+    val bucket = Windows.ntileBucket("rn", "n_total", buckets).cast("int")
+    val (ranked, totals) = Windows.prefixSums(df.filter(col(valueCol).isNotNull),
+      Nil, Seq(lit(1L) -> "rn"), Seq(col(valueCol), col(tiebreak)))
+    ranked.crossJoin(broadcast(totals.select(col("_n").as("n_total"))))
+      .withColumn("bucket", bucket)
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n"),
         round(min(col(valueCol)), 4).as("lo"),
@@ -1476,7 +1473,7 @@ object Climate {
     * Scale posture: facts reduce once to the calendar-bounded paired
     * daily table; the doubled ranks come from the DISTINCT-VALUE
     * global prefix sum ([[doubledRanks]]: one aggregate per distinct
-    * value + [[Windows.withGlobalPrefixSums]] — no partition-less
+    * value + [[Windows.prefixSums]] — no partition-less
     * window anywhere, so the op stays rank-correct even when the
     * ranked relation is NOT calendar-bounded); the readout is one
     * moments-only aggregate. */
@@ -1490,7 +1487,7 @@ object Climate {
     * serializes onto one task for ranking. */
   private def doubledRanks(df: DataFrame, v: String, out: String): DataFrame = {
     val vc = df.groupBy(col(v)).agg(count(lit(1)).as("_c"))
-    Windows.withGlobalPrefixSums(vc, Seq((col("_c"), "_cum")), col(v))
+    Windows.prefixSums(vc, Nil, Seq(col("_c") -> "_cum"), Seq(col(v)))._1
       .select(col(v), (lit(2L) * col("_cum") - col("_c") + lit(1L)).as(out))
   }
 

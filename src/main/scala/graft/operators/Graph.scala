@@ -56,8 +56,8 @@ object Graph {
     // NODE-sized rank table plus counts-only contribution partials.
     // persist() (not an eager localCheckpoint) so the pin costs no
     // separate write job — the first iteration materializes it
-    // in-line. Like GraphX's cached graph (and the lazy-pin prefix
-    // sum, Windows.scala), the pin lives in the block cache for the
+    // in-line. Like GraphX's cached graph (and Windows.prefixSums
+    // with lazyPin), the pin lives in the block cache for the
     // plan's lifetime; the REGISTERED query avoids re-pinning per
     // invocation by consuming ProcessCache-memoized artifacts
     // instead (see queries below).

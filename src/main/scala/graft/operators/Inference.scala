@@ -198,7 +198,7 @@ object Inference {
     val v = events.filter(col("value").isNotNull)
       .select(col("event_type").as("grp"), cents(col("value")).as("c"))
     val cen = v.groupBy(col("c")).agg(count(lit(1)).as("t"))
-    val ranks = Windows.withGlobalPrefixSums(cen, Seq((col("t"), "cum")), col("c"))
+    val ranks = Windows.prefixSums(cen, Nil, Seq(col("t") -> "cum"), Seq(col("c")))._1
       .select(col("c"), (lit(2L) * col("cum") - col("t") + lit(1L)).as("r2"))
     val grp = v.join(broadcast(ranks), "c")
       .groupBy(col("grp"))

@@ -1014,7 +1014,7 @@ object Similarity {
     val seed = pts.orderBy(col("vec_id")).limit(1)
       .select(col("vec_id"), col("v")).head
     // (vec_id, vector, dist2-to-nearest-prior; None for the seed)
-    var sel = Vector((seed.getLong(0), seed.getSeq[Double](1),
+    var sel = Vector((pickedId(seed, "kCenterSelect", 1, k), seed.getSeq[Double](1),
       Option.empty[Double]))
     for (t <- 2 to k) {
       val csLit = array(sel.map { case (_, cv, _) =>
@@ -1033,9 +1033,8 @@ object Similarity {
         .select((-col("b.ni")).as("vec_id"), col("b.bv").as("v"),
           col("b.d").as("d"))
         .head
-      if (b.isNullAt(0)) throw new IllegalStateException(
-        s"kCenterSelect: candidate set exhausted at rank $t (k=$k > corpus)")
-      sel = sel :+ ((b.getLong(0), b.getSeq[Double](1), Some(b.getDouble(2))))
+      sel = sel :+ ((pickedId(b, "kCenterSelect", t, k), b.getSeq[Double](1),
+        Some(b.getDouble(2))))
     }
     // k driver rows back out as a local relation; same columns, same
     // rounding, same rank order as the checkpointed-union form
@@ -1047,6 +1046,18 @@ object Similarity {
         graft.halfUp(col("dist2"), 6).as("dist2"))
       .orderBy(col("rank"))
   }
+
+  /** The vec_id of a greedy argmax row (id, vector, …), or a failure
+    * naming why there is none: an all-NULL row is the max over an
+    * empty candidate set; a NULL id beside a vector is a corpus row
+    * whose vec_id is NULL, which no pick can be reported under. */
+  private def pickedId(b: org.apache.spark.sql.Row, op: String, t: Int,
+      k: Int): Long =
+    if (!b.isNullAt(0)) b.getLong(0)
+    else if (b.isNullAt(1)) throw new IllegalStateException(
+      s"$op: candidate set exhausted at rank $t (k=$k > corpus)")
+    else throw new IllegalStateException(
+      s"$op: the rank-$t pick has a NULL vec_id; every vec_id must be non-NULL")
 
   /** (rank, vec_id, one nullable double measure) driver rows as a
     * local relation — the result shell of the driver-held greedy
@@ -1157,10 +1168,8 @@ object Similarity {
           col("b.br").as("rel"), col("b.bm").as("max_sim"),
           col("b.score").as("score"))
         .head
-      if (b.isNullAt(0)) throw new IllegalStateException(
-        s"mmrSelect: candidate set exhausted at rank $t (k=$k > corpus)")
-      sel = sel :+ ((b.getLong(0), b.getSeq[Double](1), b.getDouble(2),
-        Some(b.getDouble(3)), b.getDouble(4)))
+      sel = sel :+ ((pickedId(b, "mmrSelect", t, k), b.getSeq[Double](1),
+        b.getDouble(2), Some(b.getDouble(3)), b.getDouble(4)))
     }
     // k driver rows back out as a local relation; same columns, same
     // rounding, same rank order as the checkpointed-union form

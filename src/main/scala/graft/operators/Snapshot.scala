@@ -164,20 +164,21 @@ object Snapshot {
     *
     * Scale shape: the samples reduce to (value, n_old, n_new) counts
     * first (one hash aggregate — the only pass over raw rows); both
-    * CDFs then come from [[Windows.withGlobalPrefixSum]] over the
-    * counts table (range partition + broadcast offsets — never a
-    * single-task global window); totals and the argmax ride broadcast
-    * 1-row aggregates. All arithmetic is counts and exact-rounded
-    * divisions — no transcendentals, hash-stable. */
+    * CDFs and both sample totals come from one [[Windows.prefixSums]]
+    * layout over the counts table (range partition + broadcast offsets
+    * — never a single-task global window; totals from the same
+    * partials); totals and the argmax ride broadcast 1-row frames.
+    * All arithmetic is counts and exact-rounded divisions — no
+    * transcendentals, hash-stable. */
   def driftKs(oldSample: DataFrame, oldValue: Column,
       newSample: DataFrame, newValue: Column): DataFrame = {
     val s = oldSample.select(oldValue.as("v"), lit(1L).as("o"), lit(0L).as("n"))
       .unionByName(newSample.select(newValue.as("v"), lit(0L).as("o"), lit(1L).as("n")))
     val c = s.groupBy(col("v"))
       .agg(sum(col("o")).as("n_old"), sum(col("n")).as("n_new"))
-    val cum = Windows.withGlobalPrefixSums(c,
-      Seq(col("n_old") -> "c_old", col("n_new") -> "c_new"), col("v"))
-    val tot = c.agg(sum(col("n_old")).as("t_old"), sum(col("n_new")).as("t_new"))
+    val (cum, totals) = Windows.prefixSums(c, Nil,
+      Seq(col("n_old") -> "c_old", col("n_new") -> "c_new"), Seq(col("v")))
+    val tot = totals.select(col("c_old").as("t_old"), col("c_new").as("t_new"))
     val d = cum.crossJoin(broadcast(tot))
       .select(col("v"), col("t_old"), col("t_new"),
         abs(col("c_old").cast("double") / col("t_old").cast("double") -

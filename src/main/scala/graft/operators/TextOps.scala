@@ -117,17 +117,15 @@ object TextOps {
     * flag adjudicated as contention (clean probe passes: ~1.6 s). */
   private[graft] def vocabGrowthImpl(docs: DataFrame, folded: Boolean): DataFrame = {
     // ONE ranged layout carries BOTH the doc rank (prefix sum of 1)
-    // and the cumulative token count (r17 round 2, guide §2.4): the
-    // previous withGlobalRowNumber + withGlobalPrefixSum pair paid two
-    // range exchanges + two checkpoints over the same doc_id total
-    // order, plus a doc_id join to reunite rank with the token sums —
-    // exactly the shape the multi-measure withGlobalPrefixSums exists
-    // for. Same rows into the same running sums in the same order ⇒
-    // r, cumtok, and every output digit unchanged (oracle-pinned).
-    val rc = Windows.withGlobalPrefixSums(
+    // and the cumulative token count: a separate rank layout and
+    // token-sum layout would pay two range exchanges + two checkpoints
+    // over the same doc_id total order, plus a doc_id join to reunite
+    // them. Same rows into the same running sums in the same order ⇒
+    // r, cumtok, and every output digit as before (oracle-pinned).
+    val (rc, _) = Windows.prefixSums(
       docs.select(col("doc_id"),
         size(tokens(col("text"))).cast("long").as("nt")),
-      Seq((lit(1L), "r"), (col("nt"), "cumtok")), col("doc_id"))
+      Nil, Seq(lit(1L) -> "r", col("nt") -> "cumtok"), Seq(col("doc_id")))
     val ranked = rc.select(col("doc_id"), col("r"))
     val n1 = ranked.agg(max(col("r")).as("n"))
     val spine = n1
@@ -343,13 +341,13 @@ object TextOps {
     * global token stream div the budget (documents may straddle a
     * boundary; the trainer's concat-then-chunk step handles the split),
     * which makes the assignment a pure function of the global prefix
-    * sum — computed DISTRIBUTED via [[Windows.withGlobalPrefixSum]]
+    * sum — computed DISTRIBUTED via [[Windows.prefixSums]]
     * (range repartition + broadcast offsets, no single-task window).
     * `orderCol` must be a unique total order (corpus position). */
   def packSequences(docs: DataFrame, budgetTokens: Int): DataFrame = {
     val withTok = docs.select(col("doc_id"),
       size(tokens(col("text"))).cast("long").as("n_tok"))
-    Windows.withGlobalPrefixSum(withTok, col("n_tok"), "cum", col("doc_id"))
+    Windows.prefixSums(withTok, Nil, Seq(col("n_tok") -> "cum"), Seq(col("doc_id")))._1
       .select(col("doc_id"), col("n_tok"),
         expr(s"(cum - n_tok) div $budgetTokens").as("bin"))
       .orderBy(col("doc_id"))
@@ -361,18 +359,19 @@ object TextOps {
     * streams). Shuffle key = md5(seed ++ doc_id): uniform mixing,
     * engine-portable (the DuckDB oracle recomputes it bit-identically),
     * seeded so re-runs and audits reproduce the exact order. Global
-    * position via [[Windows.withGlobalRowNumber]] (range repartition +
-    * per-partition numbering + broadcast offsets — no single-task
-    * window); shard = (pos−1) div ceil(n/nShards) with n from a
-    * broadcast 1-row count (no driver round trip). At 100 TB this IS
-    * the shuffled-shard write job: the range partitioning on the md5
+    * position and the count n via [[Windows.prefixSums]] of 1 (range
+    * repartition + per-partition numbering + broadcast offsets — no
+    * single-task window; n from the same layout's totals, broadcast
+    * back, no driver round trip); shard = (pos−1) div ceil(n/nShards).
+    * At 100 TB this IS the shuffled-shard write job: the range partitioning on the md5
     * key is skew-free by uniformity, and each shard is a contiguous
     * slice of the shuffled order. */
   def shuffleShards(docs: DataFrame, seed: String, nShards: Int): DataFrame = {
     val keyed = docs.select(col("doc_id"),
       md5(concat(lit(seed), col("doc_id").cast("string"))).as("skey"))
-    Windows.withGlobalRowNumber(keyed, "pos", col("skey"), col("doc_id"))
-      .crossJoin(broadcast(docs.agg(count(lit(1)).as("__n"))))
+    val (ranked, totals) = Windows.prefixSums(keyed, Nil,
+      Seq(lit(1L) -> "pos"), Seq(col("skey"), col("doc_id")))
+    ranked.crossJoin(broadcast(totals.select(col("_n").as("__n"))))
       .select(col("doc_id"), col("skey"), col("pos"),
         floor((col("pos") - 1) / ceil(col("__n") / lit(nShards.toDouble)))
           .cast("int").as("shard"))
@@ -388,7 +387,7 @@ object TextOps {
     * overshoot is bounded by one document. Deterministic under
     * retries and re-runs — the mixing audit trail is the key order.
     *
-    * The per-stratum running total is [[Windows.withGroupedPrefixSum]]
+    * The per-stratum running total is [[Windows.prefixSums]]
     * — range-partitioned, so a dominant stratum (most corpora are
     * 1-language-heavy) spans tasks instead of collapsing the plan to
     * one (the naive stratum-partitioned window would). */
@@ -397,8 +396,8 @@ object TextOps {
     val keyed = docs.select(col("doc_id"), col(stratumCol).as("stratum"),
       size(tokens(col("text"))).cast("long").as("n_tok"),
       md5(concat(lit(seed), col("doc_id").cast("string"))).as("skey"))
-    Windows.withGroupedPrefixSum(keyed, "stratum", col("n_tok"), "cum",
-        col("skey"), col("doc_id"))
+    Windows.prefixSums(keyed, Seq("stratum"), Seq(col("n_tok") -> "cum"),
+        Seq(col("skey"), col("doc_id")))._1
       .filter(col("cum") - col("n_tok") < budgetTokens)
       .select(col("doc_id"), col("stratum"), col("n_tok"), col("cum"))
       .orderBy(col("stratum"), col("cum"), col("doc_id"))
@@ -411,20 +410,20 @@ object TextOps {
     * mass STARTS under the target (the [[tokenBudgetMix]] keep rule:
     * the crossing type is kept, so coverage is reached and overshoot
     * is bounded by one type). The running mass is
-    * [[Windows.withGlobalPrefixSum]] over the (cnt desc, token) total
-    * order — range-partitioned, no single-task window even though the
-    * order is global; the corpus total rides in as a broadcast 1-row
-    * aggregate (no driver round trip). */
+    * [[Windows.prefixSums]] over the (cnt desc, token) total order —
+    * range-partitioned, no single-task window even though the order is
+    * global; the corpus total is the same layout's `totals`, broadcast
+    * back (no driver round trip, no second pass over the counts). */
   def vocabCoverage(docs: DataFrame, coverage: Double): DataFrame = {
     // spread() the single-split harness scan before the per-token
-    // explode (same reason as textRepetition); the aggregate exchange
-    // below is reused for the __t total, so only the map side needs it
+    // explode (same reason as textRepetition): only the map side of the
+    // per-token aggregate needs it
     val counts = graft.spread(docs, col("doc_id"))
       .select(explode(tokens(col("text"))).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
-    Windows.withGlobalPrefixSum(counts, col("cnt"), "cum",
-        col("cnt").desc, col("token"))
-      .crossJoin(broadcast(counts.agg(sum(col("cnt")).as("__t"))))
+    val (ranked, totals) = Windows.prefixSums(counts, Nil,
+      Seq(col("cnt") -> "cum"), Seq(col("cnt").desc, col("token")))
+    ranked.crossJoin(broadcast(totals.select(col("cum").as("__t"))))
       .filter(col("cum") - col("cnt") < col("__t") * coverage)
       .select(col("token"), col("cnt"), col("cum"))
       .orderBy(col("cnt").desc, col("token"))
@@ -1074,22 +1073,20 @@ object TextOps {
     * engine-replayable.
     *
     * Scale posture: the global nll order comes from
-    * [[Windows.withGlobalRowNumber]] (range repartition + broadcast
-    * offsets — never a single-task whole-corpus window); N is a 1-row
-    * aggregate broadcast into the projection. */
+    * [[Windows.prefixSums]] of 1 (range repartition + broadcast
+    * offsets — never a single-task whole-corpus window); N is that
+    * layout's 1-row `totals`, broadcast into the projection. */
   def perplexityBuckets(docs: DataFrame, alpha: Double = 0.4): DataFrame = {
-    // MATERIALIZE the scored table once (r17, guide §1.2): the count
-    // aggregate, the rank pass's range sampling, and its shuffle each
-    // consumed the un-pinned LM chain — the two corpus explodes, both
-    // model joins, and ngramLmScore's doc_id determinism sort ran
-    // THREE times (28 jobs). The checkpoint runs the chain once, and
+    // MATERIALIZE the scored table once: the rank pass's range
+    // sampling and its shuffle would each run the un-pinned LM chain —
+    // the two corpus explodes, both model joins, and ngramLmScore's
+    // doc_id determinism sort. The checkpoint runs the chain once, and
     // the core variant skips the doc_id sort this path re-orders
-    // anyway. Values bit-identical; 28 -> 23 jobs, 2.9 -> 2.3 s
-    // (JobCountProbe warm pass).
+    // anyway.
     val scored = ngramLmScoreCore(docs, alpha).localCheckpoint()
-    val n = scored.agg(count(lit(1)).as("__n"))
-    Windows.withGlobalRowNumber(scored, "rn", col("nll"), col("doc_id"))
-      .crossJoin(broadcast(n))
+    val (ranked, totals) = Windows.prefixSums(scored, Nil,
+      Seq(lit(1L) -> "rn"), Seq(col("nll"), col("doc_id")))
+    ranked.crossJoin(broadcast(totals.select(col("_n").as("__n"))))
       .select(col("doc_id"), col("n_bigrams"), col("nll"), col("rn"),
         when(col("rn") * 3 <= col("__n"), lit("head"))
           .when(col("rn") * 3 <= col("__n") * 2, lit("middle"))
@@ -1266,7 +1263,7 @@ object TextOps {
     *
     * Scale posture: one window shuffle on the group key (bounded
     * group width here; unbounded groups escalate to the distributed
-    * prefix-sum of withGlobalPrefixSum); ties broken by id so the
+    * prefix sums of Windows.prefixSums); ties broken by id so the
     * running sum is over a total order. */
   def selectTopP(docs: DataFrame, p: Double): DataFrame = {
     require(p > 0 && p < 1, s"need 0 < p < 1: $p")

@@ -15,7 +15,7 @@ import org.apache.spark.sql.expressions.Window
   * one task; where a global order is genuinely required
   * (ntile/percent_rank), it is decomposed into range-partitioned
   * local windows plus a cumulative pass over one row per partition
-  * (see withGlobalRowNumber). Window order keys always include a
+  * (see prefixSums). Window order keys always include a
   * unique tiebreaker so results are deterministic under ties.
   */
 object Windows {
@@ -26,57 +26,80 @@ object Windows {
     .partitionBy(col("o_custkey"))
     .orderBy(col("o_orderdate"), col("o_orderkey"))
 
-  /** Distributed global row number over a total order — the scale-safe
-    * replacement for `row_number() OVER (ORDER BY …)` (which moves the
-    * whole relation to ONE task): range-repartition on the sort key,
-    * local row_number per range partition, then add per-partition
-    * offsets computed from a cumulative sum over one row per partition
-    * (provably tiny — the only unpartitioned window, over ≤
-    * shuffle-partitions rows). Sort keys must be a total order (include
-    * a unique tiebreaker) so range boundaries are unambiguous.
-    */
-  def withGlobalRowNumber(df: DataFrame, out: String, sortCols: Column*): DataFrame =
-    // row number IS the prefix sum of 1 (exact on ties too: the rows
-    // frame below makes the running sum per-row, and sortCols are a
-    // total order by contract)
-    withGlobalPrefixSum(df, lit(1L), out, sortCols: _*)
-
-  /** Distributed GLOBAL running sum over the `sortCols` total order —
-    * the generalization of [[withGlobalRowNumber]]: range repartition,
-    * per-partition running sum under a _pid-partitioned window (rows
-    * frame — per-row even among sort-key peers), then each partition's
-    * total offset added back from a broadcast ≤`shuffle.partitions`-row
-    * aggregate (the only unpartitioned window, over one row per
-    * partition). No single-task whole-relation window anywhere. */
-  def withGlobalPrefixSum(df: DataFrame, valueCol: Column, out: String,
-      sortCols: Column*): DataFrame =
-    withGlobalPrefixSums(df, Seq(valueCol -> out), sortCols: _*)
-
-  /** Multi-measure form of [[withGlobalPrefixSum]]: every
-    * (value, out-name) pair gets its global running sum over ONE
-    * shared ranged layout — one range exchange, one checkpoint, one
-    * offsets broadcast, however many measures ride along (a KS CDF
-    * pair would otherwise pay the layout twice). */
-  def withGlobalPrefixSums(df: DataFrame, measures: Seq[(Column, String)],
-      sortCols: Column*): DataFrame = {
+  /** Distributed running sums over a total order — the one scale-safe
+    * replacement for `sum(…) OVER ([PARTITION BY groups] ORDER BY …)`,
+    * for `row_number()` (the running sum of 1) and, through
+    * [[withGlobalNtile]], for `ntile`. The naive window moves the whole
+    * relation, or each group, to ONE task: a dominant group (30% of a
+    * 100 TB corpus in one stratum) becomes a single-task stage. Here:
+    *  1. one range repartition on `groups ++ sortCols` — a big group
+    *     SPANS partitions contiguously;
+    *  2. one pin of that layout: the running-sum window and the
+    *     offsets aggregate both consume it, and each re-executing the
+    *     range exchange on its own (exchange reuse is not guaranteed —
+    *     AQE canonicalization can decline it) may SAMPLE DIFFERENT
+    *     RANGE BOUNDARIES, making `_pid` disagree between the branches
+    *     and silently corrupting the sums. `lazyPin = false` pins with
+    *     an eager `localCheckpoint`; `lazyPin = true` with `persist()`,
+    *     so the range exchange still runs once (inside the cached
+    *     relation's lazily built buffer) but BUILDING the frame
+    *     launches no job — the form for frames that dry-run plans
+    *     without executing ([[Climate.featureCollection]]). The lazy pin
+    *     keeps the layout in the block-manager cache for the plan's
+    *     lifetime instead of truncating it from lineage;
+    *  3. per-row running sums under a (_pid, groups…) window (rows
+    *     frame — per-row even among sort-key peers);
+    *  4. per-(partition, group) partials, from which both the broadcast
+    *     offsets (≤ shuffle-partitions rows per group, under a window
+    *     partitioned by the groups — never by nothing) and the totals
+    *     derive.
+    *
+    * Returns `(ranked, totals)`. `ranked` is the input rows (group
+    * columns first when grouped) plus one `out` column per measure.
+    * `totals` is lazy and has one row per group — exactly one row when
+    * `groups` is empty, as a global aggregate has — holding the row
+    * count `_n` and each measure's total under its `out` name; it
+    * aggregates the pinned layout's partials, never the input chain,
+    * so callers needing "the running sum AND the total" do not
+    * re-aggregate their input.
+    *
+    * EXACTNESS CONTRACT: running sums and totals are reassociated
+    * partial sums, bit-identical to a one-pass sum only under exact
+    * arithmetic, so every measure must be integral (byte, short, int
+    * or long). Any other type is rejected from the schema at build
+    * time, before any job. `sortCols` must be a total order (include a
+    * unique tiebreaker) so range boundaries and running sums are
+    * deterministic. */
+  def prefixSums(df: DataFrame, groups: Seq[String],
+      measures: Seq[(Column, String)], sortCols: Seq[Column],
+      lazyPin: Boolean = false): (DataFrame, DataFrame) = {
     require(measures.nonEmpty, "need at least one (value, out) measure")
-    val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    // MATERIALIZE the ranged layout before branching: the running-sum
-    // window and the offsets aggregate both consume `local`, and each
-    // branch re-executing the range exchange independently (exchange
-    // reuse is not guaranteed — AQE canonicalization can decline it)
-    // may SAMPLE DIFFERENT RANGE BOUNDARIES, making _pid disagree
-    // between the branches and silently corrupting the global rank.
-    // The checkpoint pins one physical layout for both.
-    val runFrame = Window.partitionBy(col("_pid")).orderBy(sortCols: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = measures.zipWithIndex.foldLeft(
-      df.repartitionByRange(parts, sortCols: _*)
-        .withColumn("_pid", spark_partition_id())
-        .localCheckpoint()) { case (acc, ((v, _), i)) =>
-      acc.withColumn(s"_lcs$i", sum(v).over(runFrame))
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    measures.foreach { case (v, out) =>
+      // a literal is typed as is: analysing it would give it a fresh
+      // alias id, shifting every id printed in a lazily pinned plan
+      val e = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .expression(v)
+      val t = if (e.resolved) e.dataType else df.select(v).schema.head.dataType
+      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(t),
+        s"prefixSums: measure $v (-> $out) is ${t.simpleString}; " +
+          "only byte/short/int/long measures sum exactly across partitions")
     }
-    // partitionBy(pmod(_pid, 1)): semantically the same
+    val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val keys = groups.map(col)
+    val ranged = df.repartitionByRange(parts, keys ++ sortCols: _*)
+      .withColumn("_pid", spark_partition_id())
+    val runFrame = Window.partitionBy(col("_pid") +: keys: _*)
+      .orderBy(sortCols: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val ms = measures.zipWithIndex
+    val local = ms.foldLeft(if (lazyPin) ranged.persist() else ranged.localCheckpoint()) {
+      case (acc, ((v, _), i)) => acc.withColumn(s"_lcs$i", sum(v).over(runFrame))
+    }
+    val sums = ms.map { case ((v, _), i) => sum(v).as(s"_cnt$i") }
+    val partials = local.groupBy(col("_pid") +: keys: _*)
+      .agg(sums.head, sums.tail :+ count(lit(1)).as("_rc"): _*)
+    // Global offsets partition by pmod(_pid, 1): semantically the same
     // single-partition window as a partition-less spec (the offsets
     // table is bounded at <= shuffle-partitions rows BY CONSTRUCTION,
     // so one task is correct), but WindowExec only logs its "No
@@ -86,151 +109,46 @@ object Windows {
     // bug). The key must be NON-FOLDABLE: a literal partition key is
     // constant-folded out of the spec (AQE re-optimizes checkpointed
     // subplans too), bringing the warning back.
-    val offFrame = Window.partitionBy(pmod(col("_pid"), lit(1)))
+    val offFrame = Window
+      .partitionBy((if (keys.isEmpty) Seq(pmod(col("_pid"), lit(1))) else keys): _*)
       .orderBy(col("_pid"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val cnts = measures.zipWithIndex.map { case ((v, _), i) =>
-      sum(v).as(s"_cnt$i") }
-    val offsets = local.groupBy(col("_pid"))
-      .agg(cnts.head, cnts.tail: _*)
-      .select(col("_pid") +: measures.indices.map(i =>
-        coalesce(sum(col(s"_cnt$i")).over(offFrame), lit(0L)).as(s"_off$i")): _*)
-    val joined = local.join(broadcast(offsets), "_pid")
-    measures.zipWithIndex.foldLeft(joined) { case (acc, ((_, out), i)) =>
-      acc.withColumn(out, col(s"_lcs$i") + col(s"_off$i"))
-        .drop(s"_lcs$i", s"_off$i")
+    val offsets = partials.select(col("_pid") +: keys ++: ms.map { case (_, i) =>
+      coalesce(sum(col(s"_cnt$i")).over(offFrame), lit(0L)).as(s"_off$i") }: _*)
+    val ranked = ms.foldLeft(local.join(broadcast(offsets), "_pid" +: groups)) {
+      case (acc, ((_, out), i)) =>
+        acc.withColumn(out, col(s"_lcs$i") + col(s"_off$i")).drop(s"_lcs$i", s"_off$i")
     }.drop("_pid")
-  }
-
-  /** Distributed PER-GROUP running sum over a total order — the
-    * grouped generalization of [[withGlobalPrefixSum]]. The naive form
-    * (`sum over (partition by grp order by …)`) moves each group to
-    * ONE task, so a dominant group (30% of a 100 TB corpus in one
-    * stratum) becomes a single-task stage. Here: range-repartition on
-    * (group, sortCols) — a big group SPANS partitions contiguously —
-    * local running sums under a (_pid, group)-partitioned window, then
-    * each (partition, group)'s offset added back from a broadcast
-    * aggregate with ≤ shuffle-partitions rows PER GROUP (its window is
-    * group-partitioned and bounded; never partition-less, never
-    * relation-sized). Offset table is (partitions × groups) rows —
-    * broadcast-sized for any sane stratum count. */
-  def withGroupedPrefixSum(df: DataFrame, grpCol: String, valueCol: Column,
-      out: String, sortCols: Column*): DataFrame =
-    groupedPrefixSum(df, grpCol, valueCol, out, sortCols, eagerPin = true)
-
-  /** LAZY-PIN variant of [[withGroupedPrefixSum]]: the ranged layout is
-    * pinned with `persist()` instead of an eager localCheckpoint. The
-    * single-physical-layout guarantee is the same — both branches
-    * consume ONE cached plan instance, so the range exchange executes
-    * (and samples its boundaries) exactly once, at first
-    * materialization inside the cached relation's lazily-built buffer —
-    * but BUILDING the frame runs ZERO jobs. Dry-run plans the real
-    * climate composites, so every stage inside them must build without
-    * launching work: [[graft.operators.Climate.featureCollection]] sits
-    * inside both document pipelines, and an eager checkpoint there
-    * would turn "walk every plan without launching query work" into a
-    * stealth materialization. Cost of the trade: the pinned layout
-    * stays in the block-manager cache (MEMORY_AND_DISK) for the plan's
-    * lifetime instead of being truncated from lineage. */
-  def withGroupedPrefixSumLazy(df: DataFrame, grpCol: String, valueCol: Column,
-      out: String, sortCols: Column*): DataFrame =
-    groupedPrefixSum(df, grpCol, valueCol, out, sortCols, eagerPin = false)
-
-  private def groupedPrefixSum(df: DataFrame, grpCol: String, valueCol: Column,
-      out: String, sortCols: Seq[Column], eagerPin: Boolean): DataFrame =
-    groupedPrefixSumImpl(df, grpCol, valueCol, out, sortCols, eagerPin)._1
-
-  /** [[withGroupedPrefixSum]] that ALSO hands back the per-group
-    * totals the machinery computes anyway (r17 round 2, guide §1.2
-    * "don't compute things twice"): `(ranked, totals)` where totals
-    * has one row per group — `grpCol`, `_tot` = sum of `valueCol`,
-    * `_n` = row count. Callers that need "the running sum AND the
-    * group total" (weightedMedian's half-the-mass boundary,
-    * quantilesRank's ⌈q·n⌉ cuts, paretoCut's budget threshold)
-    * previously re-aggregated their INPUT for the totals — re-running
-    * the whole upstream chain (for paretoCut a join + aggregate over
-    * the order log) to recount numbers already sitting in the offsets
-    * table. The totals here aggregate the checkpointed ranged layout
-    * (group-count-bound rows), not the input chain.
-    *
-    * EXACTNESS CONTRACT: `_tot` is a sum of per-(partition, group)
-    * partial sums. For LONG measures and for doubles whose values are
-    * exact small integers (counts, cents, TPC-H quantities) this is
-    * bit-identical to a direct one-pass sum under ANY association;
-    * for general doubles the reassociation could differ in the last
-    * ulp — callers with inexact double measures must keep their own
-    * direct aggregate. */
-  def withGroupedPrefixSumAndTotals(df: DataFrame, grpCol: String,
-      valueCol: Column, out: String, sortCols: Column*): (DataFrame, DataFrame) =
-    groupedPrefixSumImpl(df, grpCol, valueCol, out, sortCols, eagerPin = true)
-
-  private def groupedPrefixSumImpl(df: DataFrame, grpCol: String,
-      valueCol: Column, out: String, sortCols: Seq[Column],
-      eagerPin: Boolean): (DataFrame, DataFrame) = {
-    val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    // same layout-pinning rationale as withGlobalPrefixSum (see there);
-    // eager checkpoint for query paths, lazy persist for plan-only paths
-    val ranged = df.repartitionByRange(parts, col(grpCol) +: sortCols: _*)
-      .withColumn("_pid", spark_partition_id())
-    val local = (if (eagerPin) ranged.localCheckpoint() else ranged.persist())
-      .withColumn("_lcs",
-        sum(valueCol).over(Window.partitionBy(col("_pid"), col(grpCol))
-          .orderBy(sortCols: _*)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    // per-(partition, group) partials: the running-sum offsets AND the
-    // group totals both derive from this group-count-bound aggregate
-    val partials = local.groupBy(col("_pid"), col(grpCol))
-      .agg(sum(valueCol).as("_cnt"), count(lit(1)).as("_rc"))
-    val offsets = partials
-      .withColumn("_off", coalesce(sum(col("_cnt")).over(
-        Window.partitionBy(col(grpCol)).orderBy(col("_pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .select(col("_pid"), col(grpCol), col("_off"))
-    val totals = partials.groupBy(col(grpCol))
-      .agg(sum(col("_cnt")).as("_tot"), sum(col("_rc")).as("_n"))
-    val ranked = local.join(broadcast(offsets), Seq("_pid", grpCol))
-      .withColumn(out, col("_lcs") + col("_off"))
-      .drop("_pid", "_lcs", "_off")
+    val totals = partials.groupBy(keys: _*)
+      .agg(coalesce(sum(col("_rc")), lit(0L)).as("_n"),
+        ms.map { case ((_, out), i) => sum(col(s"_cnt$i")).as(out) }: _*)
     (ranked, totals)
   }
 
-  /** Distributed GLOBAL ntile over the `sortCols` total order — the
-    * SQL-standard bucket formula (first N mod b buckets get ⌈N/b⌉
-    * rows) applied to [[withGlobalRowNumber]]'s distributed rank plus
-    * a broadcast 1-row count: no single-task whole-relation window
-    * (same decomposition as q_window_ntile, reusable). Sort keys must
-    * be a total order. */
-  def withGlobalNtile(df: DataFrame, out: String, buckets: Int,
-      sortCols: Column*): DataFrame =
-    withGlobalNtileFrom(df, df.agg(count(lit(1)).as("__n")), out, buckets,
-      sortCols: _*)
-
-  /** [[withGlobalNtile]] with a caller-supplied 1-row COUNT frame —
-    * for callers that cut several ntiles over the same rows (RFM's
-    * three quantile passes): the row count is invariant across the
-    * passes, and the default per-pass `df.agg(count)` re-executes the
-    * whole input chain of pass k (pass k-1's broadcast join included)
-    * once more per pass just to recount it (r17, guide §1.2 "don't
-    * compute things you throw away": q_rfm ran 53 jobs, three of them
-    * chain-recounts). The bucket arithmetic is unchanged — same
-    * SQL-standard formula, same rank machinery, bit-identical buckets
-    * (the count frame must hold count(*) of `df` as a BIGINT `__n`). */
-  def withGlobalNtileFrom(df: DataFrame, countFrame: DataFrame, out: String,
-      buckets: Int, sortCols: Column*): DataFrame = {
+  /** SQL-standard ntile bucket of row `rn` among `n` rows (LONG column
+    * names): the first n mod b buckets take ⌈n/b⌉ rows, the rest
+    * ⌊n/b⌋ — pure integer arithmetic. With n < b every row is its own
+    * bucket: rn ≤ n = n mod b takes the first branch, so the ÷ q branch
+    * is never evaluated at q = 0. */
+  private[operators] def ntileBucket(rn: String, n: String, buckets: Int): Column = {
     require(buckets >= 1, s"need buckets >= 1: $buckets")
-    withGlobalRowNumber(df, "__rn", sortCols: _*)
-      .crossJoin(broadcast(countFrame.select(col("__n"))))
-      .withColumn("__q", expr(s"__n div $buckets"))
-      .withColumn("__r", expr(s"__n % $buckets"))
-      .withColumn(out,
-        when(col("__q") === 0, col("__rn"))
-          .otherwise(expr(
-            """IF(__rn <= __r * (__q + 1),
-              |   (__rn + __q) div (__q + 1),
-              |   __r + (__rn - __r * (__q + 1) + __q - 1) div __q)""".stripMargin))
-          .cast("long"))
-      .drop("__rn", "__n", "__q", "__r")
+    val (q, r) = (s"($n div $buckets)", s"($n % $buckets)")
+    expr(s"IF($rn <= $r * ($q + 1), ($rn + $q) div ($q + 1), " +
+      s"$r + ($rn - $r * ($q + 1) + $q - 1) div $q)")
+  }
+
+  /** Distributed GLOBAL ntile over the `sortCols` total order: the
+    * [[ntileBucket]] formula over [[prefixSums]]' distributed row number,
+    * with N from the same layout's `totals` — no single-task
+    * whole-relation window, and no second pass over `df` to count it.
+    * Sort keys must be a total order. */
+  def withGlobalNtile(df: DataFrame, out: String, buckets: Int,
+      sortCols: Column*): DataFrame = {
+    val bucket = ntileBucket("__rn", "__n", buckets)
+    val (ranked, totals) = prefixSums(df, Nil, Seq(lit(1L) -> "__rn"), sortCols)
+    ranked.crossJoin(broadcast(totals.select(col("_n").as("__n"))))
+      .withColumn(out, bucket)
+      .drop("__rn", "__n")
   }
 
   /** RFM segmentation — the classic customer-value triage: per-entity
@@ -262,15 +180,12 @@ object Windows {
     val base = per.crossJoin(broadcast(ref))
       .withColumn("r_days", datediff(col("__ref"), col("__last")).cast("long"))
       .drop("__ref", "__last")
-    // ONE count frame over the checkpointed entity table shared by all
-    // three quantile passes (r17): the per-pass default re-executed
-    // pass k-1's whole chain once more per pass just to recount the
-    // same invariant N (guide §1.2) — 53 jobs -> fewer, same buckets
-    val nFrame = per.agg(count(lit(1)).as("__n")).localCheckpoint()
+    // each quantile pass takes N from its own pinned layout's partials,
+    // so no pass re-executes pass k-1's chain just to recount the rows
     val scored = Seq(
       ("r_q", col("r_days")), ("f_q", col("f_orders")), ("m_q", col("m_total")))
       .foldLeft(base) { case (df, (out, metric)) =>
-        withGlobalNtileFrom(df, nFrame, out, buckets, metric, col("o_custkey"))
+        withGlobalNtile(df, out, buckets, metric, col("o_custkey"))
       }
     scored
       .withColumn("segment", concat(col("r_q").cast("string"),
@@ -590,7 +505,7 @@ object Windows {
     * count and boundary-event count.
     *
     * Scale posture: the sweep is the distributed global prefix sum
-    * ([[withGlobalPrefixSum]]: range repartition + broadcast offsets —
+    * ([[prefixSums]]: range repartition + broadcast offsets —
     * a global ORDER with no single-task window); the day rollup is a
     * counts-only hash aggregate over the boundary stream (2 rows per
     * interval). A 100 TB interval table sweeps as 2× its row count in
@@ -601,8 +516,8 @@ object Windows {
         id.as("_id"))
       .union(intervals.select(endUs.as("t"), lit(-1L).as("delta"),
         id.as("_id")))
-    val swept = withGlobalPrefixSum(bounds, col("delta"), "open",
-      col("t"), col("delta"), col("_id"))
+    val (swept, _) = prefixSums(bounds, Nil, Seq(col("delta") -> "open"),
+      Seq(col("t"), col("delta"), col("_id")))
     swept
       .groupBy(to_date(timestamp_micros(col("t"))).as("day"))
       .agg(max(col("open")).as("peak_concurrency"),
@@ -832,8 +747,7 @@ object Windows {
     * Scale posture: one mean aggregate (map-side partials) broadcast
     * back, one window shuffle on the series key; the running frame
     * carries a single long. Relation-sized single series escalate to
-    * the distributed prefix-sum of [[withGlobalRowNumber]]'s offset
-    * pattern. */
+    * the distributed running sums of [[prefixSums]]. */
   def cusumProfile(events: DataFrame, series: Column, ts: Column,
       value: Column): DataFrame = {
     val base = events.filter(value.isNotNull)
@@ -979,20 +893,14 @@ object Windows {
     }),
 
     // Global ntile/percent_rank WITHOUT a single-task window: both are
-    // pure functions of (global row number, total count) — rn comes
-    // from the distributed withGlobalRowNumber, N from a broadcast
-    // 1-row aggregate, and the SQL-standard ntile bucket formula
-    // (first N mod n buckets get ⌈N/n⌉ rows) is integer arithmetic.
+    // pure functions of (global row number, total count) — rn and N
+    // come from one distributed prefixSums layout and its totals, and
+    // the SQL-standard ntile bucket (ntileBucket) is integer arithmetic.
     "q_window_ntile" -> ((s, d) => {
-      val base = Tables.customer(s, d)
-      withGlobalRowNumber(base, "rn", col("c_acctbal"), col("c_custkey"))
-        .crossJoin(broadcast(base.agg(count(lit(1)).as("n_total"))))
-        .withColumn("q", expr("n_total div 4"))
-        .withColumn("r", expr("n_total % 4"))
-        .withColumn("quartile",
-          expr("""IF(rn <= r * (q + 1),
-                     (rn + q) div (q + 1),
-                     r + (rn - r * (q + 1) + q - 1) div q)""").cast("long"))
+      val (ranked, totals) = prefixSums(Tables.customer(s, d), Nil,
+        Seq(lit(1L) -> "rn"), Seq(col("c_acctbal"), col("c_custkey")))
+      ranked.crossJoin(broadcast(totals.select(col("_n").as("n_total"))))
+        .withColumn("quartile", ntileBucket("rn", "n_total", 4))
         .withColumn("pct_rank",
           when(col("n_total") === 1, lit(0.0))
             .otherwise(round((col("rn") - 1).cast("double") / (col("n_total") - 1), 6)))
@@ -1008,7 +916,7 @@ object Windows {
     // only on the ORDER KEY values, not row order), so no unique
     // tiebreaker column is needed for determinism. Note the partition
     // key is low-cardinality (5 priorities): per-group sort is the
-    // scale bound — for a global variant use withGlobalRowNumber.
+    // scale bound — for a global variant use prefixSums.
     "q_window_percent_rank" -> ((s, d) => {
       val w = Window.partitionBy(col("o_orderpriority"))
         .orderBy(col("o_totalprice"))

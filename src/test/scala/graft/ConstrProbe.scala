@@ -28,21 +28,25 @@ object ConstrProbe {
     })
     val qs = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => names.isEmpty || names.contains(n) }
+    // a failed construction is reported, never timed as a fast one
+    def failed(n: String, phase: String, e: Throwable): Unit =
+      System.err.println(s"[constr] $n $phase FAILED: $e")
     // one full warmup (codegen + artifacts) so constructions are warm
-    qs.foreach { case (_, f) =>
+    qs.foreach { case (n, f) =>
       try f(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      catch { case e: Throwable => failed(n, "warmup", e) }
     }
     qs.foreach { case (n, f) =>
       val times = (1 to reps).map { _ =>
         Thread.sleep(20)
         val j0 = jobs
         val t0 = System.nanoTime()
-        try { f(spark, sfDir); () } catch { case _: Throwable => () }
-        val ms = (System.nanoTime() - t0) / 1000000L
-        (ms, jobs - j0)
+        try {
+          f(spark, sfDir)
+          s"${(System.nanoTime() - t0) / 1000000L}ms/${jobs - j0}j"
+        } catch { case e: Throwable => failed(n, "construction", e); "FAILED" }
       }
-      val tstr = times.map { case (ms, j) => s"${ms}ms/${j}j" }.mkString(" ")
+      val tstr = times.mkString(" ")
       println(s"[constr] $n  $tstr")
     }
     spark.stop()

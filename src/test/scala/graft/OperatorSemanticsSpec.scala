@@ -484,7 +484,7 @@ class OperatorSemanticsSpec extends SparkTestBase {
     assert(bucketed.nonEmpty, "fixture yields no pairs — test is vacuous")
   }
 
-  test("withGroupedPrefixSum equals the naive grouped window, dominant group included") {
+  test("prefixSums equals the naive grouped window, dominant group included") {
     import graft.operators.Windows
     import spark.implicits._
     // skewed fixture: one group holds 80% of the rows (the shape that
@@ -493,8 +493,8 @@ class OperatorSemanticsSpec extends SparkTestBase {
       (1L to 50L).map(i => ("s1", i, i % 5 + 1)) ++
       (1L to 50L).map(i => ("s2", i, i % 3 + 1))
     val df = rows.toDF("grp", "id", "v")
-    val got = Windows.withGroupedPrefixSum(df, "grp", col("v"), "cum",
-        col("id")).select("grp", "id", "cum").collect()
+    val got = Windows.prefixSums(df, Seq("grp"), Seq(col("v") -> "cum"),
+        Seq(col("id")))._1.select("grp", "id", "cum").collect()
       .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
     // naive per-group running sum, computed locally
     val want = rows.groupBy(_._1).flatMap { case (g, xs) =>
@@ -503,8 +503,30 @@ class OperatorSemanticsSpec extends SparkTestBase {
       }.tail.map { case (_, id, cum) => (g, id) -> cum }
     }.toMap
     assert(got == want)
-    assert(Windows.withGroupedPrefixSum(spark.emptyDataset[(String, Long, Long)]
-      .toDF("grp", "id", "v"), "grp", col("v"), "cum", col("id")).count() == 0)
+    assert(Windows.prefixSums(spark.emptyDataset[(String, Long, Long)]
+      .toDF("grp", "id", "v"), Seq("grp"), Seq(col("v") -> "cum"),
+      Seq(col("id")))._1.count() == 0)
+  }
+
+  test("prefixSums totals equal a direct count/sum, grouped and global, empty too") {
+    import graft.operators.Windows
+    import spark.implicits._
+    val rows = (1L to 400L).map(i => ("big", i, i % 7 + 1, (i % 3).toInt)) ++
+      (1L to 50L).map(i => ("s1", i, i % 5 + 1, 2))
+    val df = rows.toDF("grp", "id", "v", "w")
+    val measures = Seq(col("v") -> "cv", col("w") -> "cw")
+    def sorted(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(_.toSeq).sortBy(_.head.toString).toSeq
+    // empty input included: no grouped row, and ONE global row with
+    // _n = 0 and NULL measure totals, exactly as count(*)/sum give
+    for (in <- Seq(df, df.filter(lit(false)))) {
+      val grouped = Windows.prefixSums(in, Seq("grp"), measures, Seq(col("id")))._2
+      assert(sorted(grouped.select("grp", "_n", "cv", "cw")) ==
+        sorted(in.groupBy("grp").agg(count(lit(1)), sum("v"), sum("w"))))
+      val global = Windows.prefixSums(in, Nil, measures, Seq(col("grp"), col("id")))._2
+      assert(global.select("_n", "cv", "cw").collect().map(_.toSeq).toSeq ==
+        in.agg(count(lit(1)), sum("v"), sum("w")).collect().map(_.toSeq).toSeq)
+    }
   }
 
   test("tfidf: hand-computed scores, rank ties break on term, per-doc dedup via tf") {
@@ -607,7 +629,7 @@ class OperatorSemanticsSpec extends SparkTestBase {
 
   test("withGlobalNtile: exact vs local rank under chained calls AND checkpointed inputs") {
     // regression pin for the layout-pinning checkpoint in
-    // withGlobalPrefixSum: before it, the offsets and running-sum
+    // prefixSums: before it, the offsets and running-sum
     // branches could re-execute the range exchange with different
     // sampled boundaries (exchange reuse is not guaranteed), making
     // _pid disagree between branches — 79/1500 wrong quintiles in the
@@ -1192,6 +1214,16 @@ class OperatorSemanticsSpec extends SparkTestBase {
       .toDF("grp", "v", "wt", "id")
     assert(operators.Aggregations.weightedMedian(e, col("grp"), col("v"),
       col("wt"), Seq(col("id"))).head().getDouble(1) == 1.0)
+  }
+
+  test("weightedMedian: a fractional weight fails the query, naming the column") {
+    import spark.implicits._
+    val df = Seq(("g", 1.0, 1.0, 1L), ("g", 2.0, 2.5, 2L)).toDF("grp", "v", "wt", "id")
+    val e = intercept[Exception] {
+      operators.Aggregations.weightedMedian(df, col("grp"), col("v"),
+        col("wt"), Seq(col("id"))).collect()
+    }
+    assert(e.getMessage.contains("weight wt must be integer-valued"), e.getMessage)
   }
 
   test("groupGini: zero for equal mass, (n-1)/n for fully concentrated") {
@@ -2376,6 +2408,23 @@ class OperatorSemanticsSpec extends SparkTestBase {
     assert(rows(1) == ((2L, 1L, 100.0)), s"got ${rows.toSeq}")
     assert(rows(2) == ((3L, 3L, 50.0)), s"got ${rows.toSeq}")
     assert(rows(3) == ((4L, 2L, 1.0)), s"got ${rows.toSeq}")
+  }
+
+  test("kCenterSelect: NULL vec_id and an exhausted corpus fail with distinct messages") {
+    import spark.implicits._
+    val two: Seq[(Option[Long], Array[Float])] =
+      Seq((Some(0L), Array(0f, 0f)), (Some(1L), Array(1f, 0f)))
+    val exhausted = intercept[IllegalStateException] {
+      operators.Similarity.kCenterSelect(two.toDF("vec_id", "embedding"), k = 3)
+    }
+    assert(exhausted.getMessage ==
+      "kCenterSelect: candidate set exhausted at rank 3 (k=3 > corpus)")
+    val nullId = intercept[IllegalStateException] {
+      operators.Similarity.kCenterSelect(
+        (two :+ ((None, Array(5f, 5f)))).toDF("vec_id", "embedding"), k = 2)
+    }
+    assert(nullId.getMessage.contains("NULL vec_id"), nullId.getMessage)
+    assert(!nullId.getMessage.contains("exhausted"), nullId.getMessage)
   }
 
   test("cohensD: hand-checked effect size, zero at identical samples, degenerate pool NULLs") {

@@ -1,7 +1,8 @@
 package graft
 
 import java.nio.file.Files
-import graft.operators.{Climate, PipelineManager}
+import graft.operators.{Climate, PipelineManager, Windows}
+import org.apache.spark.sql.functions.col
 
 /** Multi-pipeline orchestration semantics
   * (utils/pipeline_manager.py:224-257): concurrent execution on one
@@ -220,6 +221,17 @@ class OrchestrationSpec extends SparkTestBase {
     }
     assert(stages.forall(_.startsWith("parquet at")),
       s"building a composite launched query work: $stages")
+  }
+
+  test("prefixSums rejects a double measure at build time, launching no job") {
+    val df = spark.range(100).select(col("id"), (col("id") / 2.0).as("x"))
+    val (err, stages) = stagesLaunchedBy {
+      intercept[IllegalArgumentException] {
+        Windows.prefixSums(df, Nil, Seq(col("x") -> "cum"), Seq(col("id")))
+      }
+    }
+    assert(err.getMessage.contains("measure x (-> cum) is double"), err.getMessage)
+    assert(stages.isEmpty, s"the rejected build launched work: $stages")
   }
 
   test("an injected failure is tallied and does NOT stop sibling pipelines") {

@@ -430,7 +430,7 @@ class PlanSpec extends SparkTestBase {
     // A Window with no partitionBy moves its whole input to ONE task —
     // the canonical scale-killer. The engine's contract (Windows.scala
     // scaladoc): the ONLY unpartitioned window anywhere is the second
-    // stage of withGlobalPrefixSum/withGlobalRowNumber, which runs over
+    // stage of Windows.prefixSums without groups, which runs over
     // a groupBy(_pid) aggregate — provably ≤ spark.sql.shuffle
     // .partitions rows, one per range partition. That stage is also the
     // provenance of the "No Partition Defined for Window operation"

@@ -16,7 +16,7 @@ class SoakDocSpec extends AnyFunSuite {
       |
       || primitive | wall s |
       ||---|---|
-      || withGlobalPrefixSum | 4.8 |
+      || prefixSums (global) | 4.8 |
       |""".stripMargin
   private val cc =
     """## Connected-components fixpoint (regenerated by SoakSpec)
@@ -35,7 +35,7 @@ class SoakDocSpec extends AnyFunSuite {
     SoakDoc.upsert(p, "Connected-components fixpoint", cc)
     SoakDoc.upsert(p, "Zarr connector soak", zarr)
     val full = Files.readString(p)
-    assert(full.contains("withGlobalPrefixSum") && full.contains("19 rounds")
+    assert(full.contains("prefixSums (global)") && full.contains("19 rounds")
       && full.contains("80 chunks"))
 
     // the round-6 failure shape: ONLY the primitives suite re-runs
@@ -93,7 +93,7 @@ class SoakDocSpec extends AnyFunSuite {
     SoakDoc.upsert(p, "Zarr connector soak", zarr)
     val out = Files.readString(p)
     assert(out.startsWith("hand-written preamble line"), out.take(80))
-    assert(out.contains("withGlobalPrefixSum") && out.contains("80 chunks"))
+    assert(out.contains("prefixSums (global)") && out.contains("80 chunks"))
   }
 
   test("unknown sections already in the file are kept, after known ones") {

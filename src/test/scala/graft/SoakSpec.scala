@@ -10,7 +10,7 @@ import graft.operators.{Climate, Dedup, Windows}
   * events fixture (30 month-shifted copies of sf0.1) runs the four
   * primitives whose scale story depends on NOT collapsing to a
   * whole-relation single-task stage:
-  * `withGlobalPrefixSum`, `equiHeightHistogram`,
+  * `Windows.prefixSums` (global and grouped), `equiHeightHistogram`,
   * `featureCollection` (maxPerDoc forcing multi-shard months),
   * and `monthlyResolutions`. A stage listener proves the property the
   * plans only suggest: across every job here, NO stage with one task
@@ -101,8 +101,8 @@ class SoakSpec extends SparkTestBase {
     try {
       // 1. global prefix sum over the (ts, event_id) total order
       val (ranked, tPrefix) = timed {
-        Windows.withGlobalPrefixSum(fixture, lit(1L), "rn",
-            col("ts"), col("event_id"))
+        Windows.prefixSums(fixture, Nil, Seq(lit(1L) -> "rn"),
+            Seq(col("ts"), col("event_id")))._1
           .agg(min(col("rn")).as("lo"), max(col("rn")).as("hi")).head()
       }
       assert(ranked.getLong(0) == 1L && ranked.getLong(1) == n)
@@ -115,8 +115,8 @@ class SoakSpec extends SparkTestBase {
         when(pmod(col("event_id"), lit(10)) < 8, lit("big"))
           .otherwise(concat(lit("s"), pmod(col("event_id"), lit(10)))))
       val (grouped, tGrouped) = timed {
-        Windows.withGroupedPrefixSum(skewed, "grp", lit(1L), "rn",
-            col("ts"), col("event_id"))
+        Windows.prefixSums(skewed, Seq("grp"), Seq(lit(1L) -> "rn"),
+            Seq(col("ts"), col("event_id")))._1
           .groupBy(col("grp")).agg(min(col("rn")).as("lo"),
             max(col("rn")).as("hi"), count(lit(1)).as("cnt"))
           .collect()
@@ -209,8 +209,8 @@ class SoakSpec extends SparkTestBase {
            |
            || primitive | rows in | wall s | cal ratio |
            ||---|---|---|---|
-           || withGlobalPrefixSum (ts,event_id order) | ${n / 1000000.0}M | ${f"$tPrefix%.1f"} | ${f"$ratio%.2f"} |
-           || withGroupedPrefixSum (80%-dominant stratum) | ${n / 1000000.0}M | ${f"$tGrouped%.1f"} | ${f"$ratio%.2f"} |
+           || prefixSums, global (ts,event_id order) | ${n / 1000000.0}M | ${f"$tPrefix%.1f"} | ${f"$ratio%.2f"} |
+           || prefixSums, grouped (80%-dominant stratum) | ${n / 1000000.0}M | ${f"$tGrouped%.1f"} | ${f"$ratio%.2f"} |
            || equiHeightHistogram (16 buckets) | ${n / 1000000.0}M | ${f"$tHist%.1f"} | ${f"$ratio%.2f"} |
            || featureCollection (20k/doc → ${Copies * 5} parts) | ${n / 1000000.0}M | ${f"$tShard%.1f"} | ${f"$ratio%.2f"} |
            || monthlyResolutions (2 axes × $Copies months) | ${n / 1000000.0}M | ${f"$tRes%.1f"} | ${f"$ratio%.2f"} |
