@@ -159,14 +159,7 @@ object Bench {
     def elapsed(): Double = (System.nanoTime() - tMain) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.NanosConf, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = sessionBuilder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // optional comma-separated name filter for targeted timing runs
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)

@@ -783,10 +783,10 @@ object Aggregations {
 
   /** `nativeDraws` switches the weight projection between the fused
     * [[graft.plans.BootstrapDraws]] expression (default — one digest
-    * loop per row, no hex render/parse) and the original B-column
-    * sha2 tree; both emit bit-identical weights (pinned in
-    * OperatorSemanticsSpec), the flag exists so the bench probe can
-    * alternate variants inside one JVM. */
+    * loop per row, no hex render/parse) and the B-column sha2 tree.
+    * Both emit bit-identical weights; the tree is the plain-SQL
+    * statement of the draw, kept as the reference OperatorSemanticsSpec
+    * compares the fused expression against. */
   private[graft] def bootstrapMeanImpl(df: DataFrame,
       id: org.apache.spark.sql.Column, value: org.apache.spark.sql.Column,
       b: Int, salt: String, nativeDraws: Boolean): DataFrame = {

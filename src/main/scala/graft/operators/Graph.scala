@@ -23,14 +23,6 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Probe-only switch for the A/B of the census merge-walk codegen
-    * ([[graft.plans.SortedIntersectCount]] `branchless` variant —
-    * VERDICT r16 item 7). Flipped by IntersectProbe inside one JVM to
-    * alternate variants at the exact census shape; production default
-    * stays with the case-class default until the >=20% min-of-5
-    * adoption gate clears. */
-  @volatile private[graft] var intersectBranchless: Boolean = false
-
   /** Fixed-iteration PageRank over a directed edge list (any two
     * columns: src, dst). Parallel edges collapse first — this ranks
     * the simple graph. rank_{k+1}(v) = (1-d)/N + d·Σ_{u→v} rank_k(u)/
@@ -183,8 +175,7 @@ object Graph {
       org.apache.spark.sql.GraftBridge.column(
         graft.plans.SortedIntersectCount(
           org.apache.spark.sql.GraftBridge.expression(a),
-          org.apache.spark.sql.GraftBridge.expression(b),
-          branchless = intersectBranchless))
+          org.apache.spark.sql.GraftBridge.expression(b)))
     // inner joins drop edges whose dst has no out-neighbors — those
     // close nothing (empty intersection), so the sum is unchanged
     val nTri = ori.select(col("src").cast("long").as("src"),

@@ -843,7 +843,13 @@ object Similarity {
     * count per cid) whose exchange carries k·(d+1) longs per map
     * task — never vectors, never the r13 n·d (cid, pos, x) explode;
     * each iteration localCheckpoints k rows so plan depth stays O(1)
-    * in iters. */
+    * in iters.
+    *
+    * Construction is execution: building the frame runs every Lloyd
+    * round as Spark jobs (the per-round centroid collect), so only the
+    * final assignment is left for the caller's action. A dry run that
+    * must launch no job cannot build it; `graft.Profile` reports these
+    * jobs as its `construct_jobs`. */
   def kmeansExact(emb: DataFrame, k: Int = 4, iters: Int = 6): DataFrame = {
     require(k >= 2 && iters >= 1, s"need k >= 2, iters >= 1: $k, $iters")
     val pts = emb.select(col("vec_id"), toDouble(col("embedding")).as("v"))
@@ -991,7 +997,12 @@ object Similarity {
     * Scale posture: the kmeans shape — the selected set packs into
     * ONE broadcast row per round, every candidate scores row-locally,
     * the round reduces to a 1-row argmax (max of a struct, with
-    * map-side partials); k bounded; corpus never shuffles. */
+    * map-side partials); k bounded; corpus never shuffles.
+    *
+    * Construction is execution: building the frame runs all k−1
+    * greedy picks as Spark jobs (a 1-row argmax per pick), so the
+    * returned frame is the selected set, not a plan for it;
+    * `graft.Profile` reports these jobs as its `construct_jobs`. */
   def kCenterSelect(emb: DataFrame, k: Int = 8): DataFrame = {
     require(k >= 2, s"need k >= 2: $k")
     val pts = emb.select(col("vec_id").cast("long").as("vec_id"),
@@ -1123,7 +1134,12 @@ object Similarity {
     * source for 1−0.7's last-ulp repr). Scale: the k−1 greedy rounds
     * are each one broadcast of ≤ k selected vectors + a row-local
     * codegen'd score + a 1-row argmax reduction (the kCenter
-    * posture); relevance computes ONCE into a checkpoint. */
+    * posture); relevance computes ONCE into a checkpoint.
+    *
+    * Construction is execution: building the frame runs the relevance
+    * checkpoint and all k−1 greedy picks as Spark jobs, so the
+    * returned frame is the selected set, not a plan for it;
+    * `graft.Profile` reports these jobs as its `construct_jobs`. */
   def mmrSelect(emb: DataFrame, queryId: Long = 0L, k: Int = 8,
       lam: Double = 0.7): DataFrame = {
     require(k >= 2, s"need k >= 2: $k")

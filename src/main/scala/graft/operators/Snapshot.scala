@@ -265,7 +265,7 @@ object Snapshot {
     // the session parallelism (r17, guide §2.3/§2.5): the harness
     // tables are one parquet row group, so the N-way melt explode +
     // partial distinct — the whole CPU of this query — ran on ONE
-    // core (2.3 s single-task stage, StageProfile); hash-spreading
+    // core (a 2.3 s single-task stage); hash-spreading
     // the 10 projected columns costs one ~14 MB exchange locally and
     // is a NO-OP on a real many-split archive. Both melts share the
     // spread subtree (reused exchange), and every aggregate here is

@@ -95,27 +95,10 @@ object TextOps {
     * (token, min rank) hash aggregate — the shuffle carries the vocab,
     * not the corpus — and the 10-row checkpoint spine re-counts it
     * with counts-only aggregates. Nothing is quadratic, nothing
-    * collects. */
-  def vocabGrowth(docs: DataFrame): DataFrame =
-    vocabGrowthImpl(docs, folded = false)
-
-  /** `folded` selects the vocab-side plan (outputs hash-identical):
-    *  - false (DEFAULT — the r12 registration): first-seen ranks
-    *    cross-join the 10-decile spine (vocab×10 rows) and
-    *    re-aggregate per decile;
-    *  - true — the r16 fold candidate (VERDICT r15 item 2): each
-    *    token maps to its FIRST covering decile
-    *    i0 = ⌈(10·fr − 9) / n⌉ (the exact inverse of
-    *    k_i = (n·i+9) div 10, integer arithmetic), vocab rows
-    *    collapse to ≤10 (i0, count) buckets, and the ≤10×10
-    *    triangular join replays the cumulative count.
-    * MEASURED NOT ADOPTED (VocabGrowthProbe, one-JVM alternation at
-    * sf0.1, outputs asserted identical): the fold read −18%/−9%
-    * SLOWER across two probe runs — the corpus explode into the
-    * (token, min rank) aggregate dominates and the extra agg stage
-    * costs more than the vocab×10 filter saves; r15's 5.26 s bench
-    * flag adjudicated as contention (clean probe passes: ~1.6 s). */
-  private[graft] def vocabGrowthImpl(docs: DataFrame, folded: Boolean): DataFrame = {
+    * collects. A folded variant (each token bucketed to its first
+    * covering decile) measured slower and was not adopted
+    * (`r16_vocab_growth_adjudication` in `tools/bench_notes.json`). */
+  def vocabGrowth(docs: DataFrame): DataFrame = {
     // ONE ranged layout carries BOTH the doc rank (prefix sum of 1)
     // and the cumulative token count: a separate rank layout and
     // token-sum layout would pay two range exchanges + two checkpoints
@@ -138,20 +121,10 @@ object TextOps {
       .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
       .join(ranked, "doc_id")
       .groupBy(col("tok")).agg(min(col("r")).as("fr"))
-    val typesAt =
-      if (folded) {
-        // i0 = smallest i with k_i ≥ fr: k_i ≥ fr ⇔ n·i+9 ≥ 10·fr
-        // ⇔ i ≥ (10·fr − 9)/n ⇔ i0 = (10·fr − 9 + n − 1) div n
-        // (fr ∈ [1, n] ⇒ i0 ∈ [1, 10] — no clamp needed)
-        val buckets = firstSeen.crossJoin(broadcast(n1))
-          .select(expr("(10 * fr - 9 + n - 1) div n").as("i0"))
-          .groupBy(col("i0")).agg(count(lit(1)).as("cnt"))
-        broadcast(spine).join(buckets, col("i0") <= col("i"))
-          .groupBy(col("i"), col("k")).agg(sum(col("cnt")).as("n_types"))
-      } else firstSeen
-        .crossJoin(broadcast(spine))
-        .filter(col("fr") <= col("k"))
-        .groupBy(col("i"), col("k")).agg(count(lit(1)).as("n_types"))
+    val typesAt = firstSeen
+      .crossJoin(broadcast(spine))
+      .filter(col("fr") <= col("k"))
+      .groupBy(col("i"), col("k")).agg(count(lit(1)).as("n_types"))
     tokensAt.join(typesAt, Seq("i", "k"))
       .select(col("i"), col("k"), col("n_tokens"), col("n_types"),
         graft.halfUp(col("n_types").cast("double") /

@@ -5,6 +5,20 @@ package object graft {
     */
   type Q = (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame
 
+  /** The engine's session shape: the graft SQL extensions, `local[cores]`
+    * with as many shuffle partitions, UTC, nanosecond parquet timestamps
+    * read as longs ([[Tables.NanosConf]]) and no UI. Returns the builder,
+    * so a caller can add an app name or its own settings before
+    * `getOrCreate()`. */
+  def sessionBuilder(cores: String): org.apache.spark.sql.SparkSession.Builder =
+    org.apache.spark.sql.SparkSession.builder()
+      .withExtensions(new graft.plans.GraftExtensions)
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config(Tables.NanosConf, "true")
+      .config("spark.ui.enabled", "false")
+
   /** Spread CPU-heavy narrow work across cores before it runs.
     *
     * The harness tables arrive as ONE parquet split, which pins any

@@ -20,6 +20,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * matching pair step, so the caller's arrays should be duplicate-free
   * (collect_list over a DISTINCT edge set is).
   *
+  * The walk is the plain three-way compare: on real adjacency data the
+  * CPU predicts that branch well, and a ternary-to-int (cmov) walk,
+  * which turns it into one serial dependency chain, measured ~1.9×
+  * slower at the sf1 census shape (`r17_intersect_probe` in
+  * `tools/bench_notes.json`).
+  *
   * Null semantics: a NULL array yields NULL; a NULL ELEMENT yields
   * NULL only if the merge walk actually VISITS it — the walk stops as
   * soon as either array is exhausted, so e.g. (a=[1], b=[2, null])
@@ -30,28 +36,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * caller that needs guaranteed poisoning on nullable-element arrays
   * must pre-check (e.g. `exists(a, isnull)`) before the walk.
   */
-case class SortedIntersectCount(left: Expression, right: Expression,
-    branchless: Boolean = false) extends BinaryExpression {
-
-  /** `branchless` (probe variant, NOT the default — VERDICT r16 item
-    * 7, measured r17): ternary-to-int compare + static null-probe
-    * elision. At the sf1 census shape (IntersectProbe, local[8],
-    * min-of-5 alternating in one JVM) it measured ~1.9x SLOWER than
-    * the branchy walk (min 53.1 s vs 28.1 s): the serial cmov
-    * dependency chain defeats the CPU's branch speculation, which
-    * handles the 3-way compare well on real adjacency data. Kept as a
-    * documented variant per the repo discipline (measure before — and
-    * after — believing a "faster" form). */
-
-  /** Static element-nullability: when BOTH input array types declare
-    * containsNull=false (sort_array(collect_list(...)) does), the
-    * per-element isNullAt probes can be elided from codegen — the
-    * interpreted path keeps them, and with no null elements possible
-    * the two paths are trivially identical. */
-  private def elemsNullable: Boolean = (left.dataType, right.dataType) match {
-    case (ArrayType(_, ln), ArrayType(_, rn)) => ln || rn
-    case _ => true
-  }
+case class SortedIntersectCount(left: Expression, right: Expression)
+    extends BinaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
@@ -98,44 +84,21 @@ case class SortedIntersectCount(left: Expression, right: Expression,
       val c = ctx.freshName("c")
       val x = ctx.freshName("x")
       val y = ctx.freshName("y")
-      if (branchless && !elemsNullable)
-        // BRANCHLESS walk for the null-free case: the classic 3-way
-        // compare is an unpredictable branch per step on real
-        // adjacency data; ternary-to-int compiles to setcc/cmov and
-        // keeps the loop a straight dependency chain. Each step
-        // advances at least one cursor (x<=y or y<=x always holds),
-        // so termination and the visit order are identical to the
-        // branchy walk — same count on any sorted inputs.
-        s"""
-           |int $na = $a.numElements();
-           |int $nb = $b.numElements();
-           |int $i = 0; int $j = 0;
-           |long $c = 0L;
-           |while ($i < $na && $j < $nb) {
-           |  long $x = $a.getLong($i);
-           |  long $y = $b.getLong($j);
-           |  $c += ($x == $y) ? 1L : 0L;
-           |  $i += ($x <= $y) ? 1 : 0;
-           |  $j += ($y <= $x) ? 1 : 0;
-           |}
-           |${ev.value} = $c;
-           |""".stripMargin
-      else
-        s"""
-           |int $na = $a.numElements();
-           |int $nb = $b.numElements();
-           |int $i = 0; int $j = 0;
-           |long $c = 0L;
-           |while ($i < $na && $j < $nb) {
-           |  if ($a.isNullAt($i) || $b.isNullAt($j)) { ${ev.isNull} = true; break; }
-           |  long $x = $a.getLong($i);
-           |  long $y = $b.getLong($j);
-           |  if ($x < $y) { $i++; }
-           |  else if ($x > $y) { $j++; }
-           |  else { $c++; $i++; $j++; }
-           |}
-           |if (!${ev.isNull}) ${ev.value} = $c;
-           |""".stripMargin
+      s"""
+         |int $na = $a.numElements();
+         |int $nb = $b.numElements();
+         |int $i = 0; int $j = 0;
+         |long $c = 0L;
+         |while ($i < $na && $j < $nb) {
+         |  if ($a.isNullAt($i) || $b.isNullAt($j)) { ${ev.isNull} = true; break; }
+         |  long $x = $a.getLong($i);
+         |  long $y = $b.getLong($j);
+         |  if ($x < $y) { $i++; }
+         |  else if ($x > $y) { $j++; }
+         |  else { $c++; $i++; $j++; }
+         |}
+         |if (!${ev.isNull}) ${ev.value} = $c;
+         |""".stripMargin
     })
 
   override protected def withNewChildrenInternal(

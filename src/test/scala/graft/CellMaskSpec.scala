@@ -58,23 +58,16 @@ class CellMaskSpec extends SparkTestBase {
       .filter(pmod(col("id"), lit(7)) < 3)
       .select((col("id") / nLon).cast("int").as("la"),
         pmod(col("id"), lit(nLon)).cast("int").as("lo"))
-    val maxResult = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null)
-          maxResult.getAndUpdate(m => math.max(m, te.taskMetrics.resultSize))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val dist = try CellMask.fromCellsDistributed(cellsDf) finally {
-      Thread.sleep(2000) // drain the listener bus before reading maxResult
-      spark.sparkContext.removeSparkListener(listener)
+    val (dist, maxResult) = StageLog.record(spark) { log =>
+      val d = CellMask.fromCellsDistributed(cellsDf)
+      (d, log.stages.map(_.maxTaskResult).maxOption.getOrElse(0L))
     }
     // zero driver ROW collection: the largest task result is a word
     // array (nWords = 1.2e6/64 = 18750 longs = 150 KB, plus task
     // overhead), nowhere near the ~1 MB+ a per-task row collect of
     // 128k cells would ship
-    assert(maxResult.get() > 0 && maxResult.get() < 600L * 1024,
-      s"largest task result ${maxResult.get()} bytes — row-collect sized, not word-array sized")
+    assert(maxResult > 0 && maxResult < 600L * 1024,
+      s"largest task result $maxResult bytes — row-collect sized, not word-array sized")
     // exact parity with the driver-side build over the same cell set
     val local = CellMask.fromCells(
       (0L until nLat.toLong * nLon).filter(_ % 7 < 3)

@@ -10,31 +10,14 @@ import org.apache.spark.sql.functions.col
   */
 class OrchestrationSpec extends SparkTestBase {
 
-  /** Runs `body` under its own job group and returns its result with
-    * the names of the stages it launched. A sentinel job in a second
-    * group runs after `body`; the status store applies listener events
-    * in order, so once the sentinel is visible every job `body` launched
-    * is visible too — an empty answer cannot come from events still in
-    * flight. */
-  private def stagesLaunchedBy[T](body: => T): (T, Seq[String]) = {
-    val sc = spark.sparkContext
-    val tracker = sc.statusTracker
-    val id = java.util.UUID.randomUUID().toString
-    def stages(group: String): Seq[String] =
-      tracker.getJobIdsForGroup(group).toSeq.flatMap(j =>
-        tracker.getJobInfo(j).toSeq.flatMap(_.stageIds().toSeq)).flatMap(s =>
-        tracker.getStageInfo(s).toSeq.map(_.name()))
-    sc.setJobGroup(s"graft-body-$id", "body under test", interruptOnCancel = false)
-    val result = try body finally sc.clearJobGroup()
-    sc.setJobGroup(s"graft-sentinel-$id", "sentinel", interruptOnCancel = false)
-    try spark.range(10).count() finally sc.clearJobGroup()
-    val deadline = System.nanoTime + 10e9.toLong
-    while (stages(s"graft-sentinel-$id").isEmpty && System.nanoTime < deadline)
-      Thread.sleep(50)
-    assert(stages(s"graft-sentinel-$id").nonEmpty,
-      "sentinel job invisible — an empty stage list would be vacuous")
-    (result, stages(s"graft-body-$id"))
-  }
+  /** Runs `body` and returns its result with the names of the stages
+    * of every job it started, finished or still running
+    * ([[StageLog.launched]]): an empty answer means no job started. */
+  private def stagesLaunchedBy[T](body: => T): (T, Seq[String]) =
+    StageLog.record(spark) { log =>
+      val result = body
+      (result, log.launched)
+    }
 
   test("runClimatePipelines: all three composites land concurrently on one session") {
     val out = Files.createTempDirectory("graft_orch").toString
@@ -155,44 +138,24 @@ class OrchestrationSpec extends SparkTestBase {
   }
 
   test("dryRunAll: plans resolve and render, failures surface, ZERO query jobs launch") {
-    import org.apache.spark.sql.functions.col
-    // job-group-scoped job detection: dryRunAll runs its thunks on THIS
-    // thread, so any job it launched would inherit this group — jobs
-    // from concurrently-running suites (other threads) are excluded
-    val group = "graft-dryrun-zero-jobs"
-    val tracker = spark.sparkContext.statusTracker
-    def stageNames(): Seq[String] =
-      tracker.getJobIdsForGroup(group).toSeq.flatMap(j =>
-        tracker.getJobInfo(j).toSeq.flatMap(_.stageIds().toSeq)).flatMap(s =>
-        tracker.getStageInfo(s).toSeq.map(_.name()))
-    spark.sparkContext.setJobGroup(group, "dry-run spec", interruptOnCancel = false)
-    try {
-      val (summary, plans) = PipelineManager.dryRunAll(spark, Seq(
+    val ((summary, plans), metadataOnly) = stagesLaunchedBy {
+      PipelineManager.dryRunAll(spark, Seq(
         "monthly" -> (() => graft.operators.Climate.monthlyAgg(spark, sf)),
         "join" -> (() => SparkEntry.queries("q_join_broadcast")(spark, sf)),
         "bad_column" -> (() =>
           Tables.nation(spark, sf).select(col("no_such_column")))))
-      // the rehearsal verdict: resolvable pipelines pass, the analysis
-      // error is caught and reported, siblings unaffected
-      assert(summary.successCount == 2 && summary.failedNames == Seq("bad_column"))
-      assert(plans.keySet == Set("monthly", "join"))
-      assert(plans.values.forall(p => p.contains("Scan") && p.nonEmpty))
-      // the ONLY cluster activity is parquet source-schema resolution
-      // (one footer read per source — metadata, the rehearsal analog of
-      // the reference's input existence checks); no query job — scan,
-      // shuffle, aggregate, sink — may run
-      val metadataOnly = stageNames()
-      assert(metadataOnly.forall(_.startsWith("parquet at")),
-        s"dry-run launched query work: $metadataOnly")
-      // ...and the detector itself works: a real action under the same
-      // group IS visible to the tracker (guards against a vacuous pass)
-      spark.range(10).count()
-      val deadline = System.nanoTime + 10e9.toLong
-      while (stageNames().forall(_.startsWith("parquet at"))
-        && System.nanoTime < deadline) Thread.sleep(50)
-      assert(stageNames().exists(n => !n.startsWith("parquet at")),
-        "sentinel job invisible — the zero-query-jobs assertion would be vacuous")
-    } finally spark.sparkContext.clearJobGroup()
+    }
+    // the rehearsal verdict: resolvable pipelines pass, the analysis
+    // error is caught and reported, siblings unaffected
+    assert(summary.successCount == 2 && summary.failedNames == Seq("bad_column"))
+    assert(plans.keySet == Set("monthly", "join"))
+    assert(plans.values.forall(p => p.contains("Scan") && p.nonEmpty))
+    // the ONLY cluster activity is parquet source-schema resolution
+    // (one footer read per source — metadata, the rehearsal analog of
+    // the reference's input existence checks); no query job — scan,
+    // shuffle, aggregate, sink — may run
+    assert(metadataOnly.forall(_.startsWith("parquet at")),
+      s"dry-run launched query work: $metadataOnly")
   }
 
   test("dryRunClimatePipelines rehearses all three reference pipelines, ZERO query jobs") {

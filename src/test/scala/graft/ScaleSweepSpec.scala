@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -50,14 +48,8 @@ class ScaleSweepSpec extends AnyFunSuite {
     assume(sys.env.get("GRAFT_SCALE_SWEEP").contains("1"),
       "set GRAFT_SCALE_SWEEP=1 to run the sf1 sweep (tens of minutes)")
     val cpus = sys.env.getOrElse("GRAFT_SCALE_CPUS", "8")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
+    val spark = sessionBuilder(cpus)
       .appName("graft-scale-sweep")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.NanosConf, "true")
-      .config("spark.ui.enabled", "false")
       // With the default 64 MB advisory, CORRECT AQE coalescing can
       // merge a modest post-shuffle output into one task and exceed
       // the 32 MB budget — indistinguishable from a structural
@@ -76,61 +68,56 @@ class ScaleSweepSpec extends AnyFunSuite {
     val tFixture = (System.nanoTime() - tFix0) / 1e9
     assert(spark.read.parquet(s"$dir/lineitem.parquet").count() == 6000000L)
 
-    // stages are attributed to the query whose action was running when
-    // they completed — queries run sequentially, one action each, so
-    // the wall-clock window attribution is exact up to listener-bus lag
-    @volatile var currentQuery = "<setup>"
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int, Int, Long, String)]()
-    val listener = new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        stages.add((currentQuery, si.stageId, si.numTasks,
-          si.taskMetrics.shuffleReadMetrics.totalBytesRead,
-          si.name.takeWhile(_ != '\n').take(80)))
-      }
-    }
-
     Bench.calibrationProbe(spark) // codegen/JIT warmup
     val calBefore = Seq.fill(3)(Bench.calibrationProbe(spark)).sorted.apply(1)
-    spark.sparkContext.addSparkListener(listener)
     val results = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
     val retimes = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
     val failures = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    // ---- ingest-artifact pre-pass: build every ProcessCache artifact
-    // OUTSIDE the consumer slots by running ONE consumer per artifact
-    // untimed first. Pre-r13 the first consumer paid the build inside
-    // its own slot (the r12 triangles slot read 63.0 s while the
-    // census itself was 10.5 s) — attribution noise that would mask a
-    // real consumer regression. ProcessCache.builds then carries the
-    // per-artifact seconds for the record's own table, and every
-    // consumer slot below reflects query cost only (the pre-pass
-    // queries re-run timed, now hitting the cache). Stages completed
-    // here attribute to <artifact-prebuild>, still under the listener
-    // budget.
-    currentQuery = "<artifact-prebuild>"
-    val tArt0 = System.nanoTime()
-    val prebuilders = Bench.ArtifactConsumers.toSeq
-      .flatMap { case (q, ks) => ks.map(k => k -> q) }
-      .groupBy(_._1).map { case (_, qs) => qs.map(_._2).min }.toSet
-    prebuilders.toSeq.sorted.foreach { q =>
-      try SparkEntry.queries(q)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () } // a failure re-surfaces timed below
-    }
-    val tArtPass = (System.nanoTime() - tArt0) / 1e9
-    val artBuilds = ProcessCache.builds.toSeq
-      .map { case (k, v) => (k.takeWhile(_ != ':'), v) }.sortBy(-_._2)
-    try {
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-        currentQuery = name
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, dir).write.format("noop").mode("overwrite").save()
-          results += ((name, (System.nanoTime() - t0) / 1e9))
-        } catch { case e: Throwable =>
-          failures += ((name, String.valueOf(e.getMessage).take(300)))
+    // one StageLog window over the whole sweep, so every stage that
+    // completes in it meets the budget check below; queries run one at
+    // a time, and each is attributed the stages that completed since the
+    // previous query's read of the log
+    val stages = scala.collection.mutable.ArrayBuffer.empty[(String, StageLog.Stage)]
+    val (tArtPass, artBuilds) = StageLog.record(spark) { log =>
+      def attributed(q: String)(body: => Unit): Unit = {
+        body
+        stages ++= log.stages.drop(stages.size).map(q -> _)
+      }
+      // ---- ingest-artifact pre-pass: build every ProcessCache artifact
+      // OUTSIDE the consumer slots by running ONE consumer per artifact
+      // untimed first. Pre-r13 the first consumer paid the build inside
+      // its own slot (the r12 triangles slot read 63.0 s while the
+      // census itself was 10.5 s) — attribution noise that would mask a
+      // real consumer regression. ProcessCache.builds then carries the
+      // per-artifact seconds for the record's own table, and every
+      // consumer slot below reflects query cost only (the pre-pass
+      // queries re-run timed, now hitting the cache). Stages completed
+      // here attribute to <artifact-prebuild>, still under the listener
+      // budget.
+      val tArt0 = System.nanoTime()
+      val prebuilders = Bench.ArtifactConsumers.toSeq
+        .flatMap { case (q, ks) => ks.map(k => k -> q) }
+        .groupBy(_._1).map { case (_, qs) => qs.map(_._2).min }.toSet
+      attributed("<artifact-prebuild>") {
+        prebuilders.toSeq.sorted.foreach { q =>
+          try SparkEntry.queries(q)(spark, dir)
+            .write.format("noop").mode("overwrite").save()
+          catch { case _: Throwable => () } // a failure re-surfaces timed below
         }
-        Thread.sleep(50) // let this query's stage completions land on it
+      }
+      val tArtPass = (System.nanoTime() - tArt0) / 1e9
+      val artBuilds = ProcessCache.builds.toSeq
+        .map { case (k, v) => (k.takeWhile(_ != ':'), v) }.sortBy(-_._2)
+      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+        attributed(name) {
+          val t0 = System.nanoTime()
+          try {
+            fn(spark, dir).write.format("noop").mode("overwrite").save()
+            results += ((name, (System.nanoTime() - t0) / 1e9))
+          } catch { case e: Throwable =>
+            failures += ((name, String.valueOf(e.getMessage).take(300)))
+          }
+        }
       }
       // RETIME the slow tail: first-shot rows are single-sample and
       // band-sensitive — r16's q_graph_pagerank read 84.3/171.8 s
@@ -141,28 +128,27 @@ class ScaleSweepSpec extends AnyFunSuite {
       // visible. Bounded: only rows over the threshold pay it.
       val slowQs = results.filter(_._2 > RetimeThresholdSec).map(_._1)
       slowQs.foreach { name =>
-        currentQuery = name
-        val t0 = System.nanoTime()
-        try {
-          SparkEntry.queries(name)(spark, dir)
-            .write.format("noop").mode("overwrite").save()
-          retimes += ((name, (System.nanoTime() - t0) / 1e9))
-        } catch { case _: Throwable => () } // first shot already succeeded
-        Thread.sleep(50)
+        attributed(name) {
+          val t0 = System.nanoTime()
+          try {
+            SparkEntry.queries(name)(spark, dir)
+              .write.format("noop").mode("overwrite").save()
+            retimes += ((name, (System.nanoTime() - t0) / 1e9))
+          } catch { case _: Throwable => () } // first shot already succeeded
+        }
       }
-      Thread.sleep(2000) // drain the listener bus
-    } finally spark.sparkContext.removeSparkListener(listener)
+      (tArtPass, artBuilds)
+    }
     val calAfter = Seq.fill(3)(Bench.calibrationProbe(spark)).sorted.apply(1)
 
     assert(failures.isEmpty,
       s"queries failed at sf1:\n${failures.map(f => s"  ${f._1}: ${f._2}").mkString("\n")}")
-    val violations = stages.toArray(Array.empty[(String, Int, Int, Long, String)])
-      .filter { case (_, _, tasks, bytes, _) =>
-        tasks == 1 && bytes > SingleTaskShuffleBudget }
+    val violations = stages.filter { case (_, st) =>
+      st.tasks == 1 && st.shuffleRead > SingleTaskShuffleBudget }
     assert(violations.isEmpty,
       "single-task stages read relation-sized shuffles:\n" + violations.map {
-        case (q, sid, _, bytes, sname) =>
-          s"  $q stage $sid read ${bytes / 1024 / 1024} MB ($sname)"
+        case (q, st) =>
+          s"  $q stage ${st.id} read ${st.shuffleRead / 1024 / 1024} MB (${st.name})"
       }.mkString("\n"))
 
     // per-family rollup on MIN(first shot, retime): the retimed value
@@ -221,7 +207,7 @@ class ScaleSweepSpec extends AnyFunSuite {
          |trained quantizers, graph edges — timed as their OWN rows
          |below; consumer slots reflect query cost only); sweep total
          |${f"$total%.0f"} s; **0 failures, 0 single-task stages over the
-         |32 MB shuffle budget** across the whole run; cal ratio
+         |32 MB shuffle budget** among the ${stages.size} stages of the run; cal ratio
          |${f"${calBefore / SweepCalibrationRefSec}%.2f"} before /
          |${f"${calAfter / SweepCalibrationRefSec}%.2f"} after (median
          |probe vs the ${SweepCalibrationRefSec} s quiet local[$cpus]

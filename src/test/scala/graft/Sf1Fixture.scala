@@ -64,15 +64,7 @@ object Sf1Fixture {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val cpus = if (args.length > 1) args(1) else "16"
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .appName("graft-sf1-fixture")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.NanosConf, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = sessionBuilder(cpus).appName("graft-sf1-fixture").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     build(spark, "/root/testdata/sf0.1", dir)
     assert(spark.read.parquet(s"$dir/lineitem.parquet").count() == 6000000L)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Climate, Dedup, Windows}
@@ -33,6 +32,17 @@ class SoakSpec extends SparkTestBase {
     * collapse trips a 32 MB budget with 4× headroom while every
     * legitimate single-task stage here stays under ~15 MB. */
   private val SingleTaskShuffleBudget = 32L * 1024 * 1024
+
+  /** The standing invariant over every stage in `log`'s window so far:
+    * no single-task stage read more than [[SingleTaskShuffleBudget]] of
+    * shuffle. Returns the largest single-task shuffle read. */
+  private def assertShuffleBudget(log: StageLog): Long = {
+    val single = log.stages.filter(_.tasks == 1)
+    val violations = single.filter(_.shuffleRead > SingleTaskShuffleBudget)
+    assert(violations.isEmpty,
+      s"single-task stages read relation-sized shuffles: ${violations.mkString(", ")}")
+    single.map(_.shuffleRead).maxOption.getOrElse(0L)
+  }
 
   /** Quiet-machine reference for [[Bench.calibrationProbe]] AT THE
     * SOAK HARNESS SHAPE (local[4] on the 32-core build box; median of
@@ -79,15 +89,6 @@ class SoakSpec extends SparkTestBase {
   }
 
   test("3M-row soak: distributed primitives, no single-task stage at scale") {
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, Long)]()
-    val listener = new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        stages.add((si.stageId, si.numTasks,
-          si.taskMetrics.shuffleReadMetrics.totalBytesRead))
-      }
-    }
-
     def timed[A](body: => A): (A, Double) = {
       val t0 = System.nanoTime()
       val a = body
@@ -97,8 +98,7 @@ class SoakSpec extends SparkTestBase {
     val n = fixture.count()
     assert(n == Copies * 100000L, s"fixture rows: $n")
 
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    StageLog.record(spark) { log =>
       // 1. global prefix sum over the (ts, event_id) total order
       val (ranked, tPrefix) = timed {
         Windows.prefixSums(fixture, Nil, Seq(lit(1L) -> "rn"),
@@ -182,13 +182,7 @@ class SoakSpec extends SparkTestBase {
       assert(interp.getLong(1) == 0L, s"unfilled rows: ${interp.getLong(1)}")
       assert(interp.getLong(2) > n / 8, "planted gaps not interpolated")
 
-      // drain the listener bus before reading the stage log
-      Thread.sleep(2000)
-      val violations = stages.toArray(Array.empty[(Int, Int, Long)])
-        .filter { case (_, tasks, shuffleBytes) =>
-          tasks == 1 && shuffleBytes > SingleTaskShuffleBudget }
-      assert(violations.isEmpty,
-        s"single-task stages read relation-sized shuffles: ${violations.mkString(", ")}")
+      assertShuffleBudget(log)
 
       val ratio = calRatio()
       val doc =
@@ -218,7 +212,7 @@ class SoakSpec extends SparkTestBase {
            |""".stripMargin
       SoakDoc.upsert(SoakDoc.Path,
         "Distributed-primitive soak", doc)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   test("CC fixpoint soak: 1M planted edges, long chain converges in <= log2(n)+2 rounds") {
@@ -240,16 +234,7 @@ class SoakSpec extends SparkTestBase {
       .select(col("e.id_a"), col("e.id_b"))
     val edges = chain.union(fill).repartition(8)
 
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, Long)]()
-    val listener = new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        stages.add((si.stageId, si.numTasks,
-          si.taskMetrics.shuffleReadMetrics.totalBytesRead))
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    StageLog.record(spark) { log =>
       val t0 = System.nanoTime()
       val (cc, rounds) = Dedup.connectedComponentsWithRounds(edges)
       val total = cc.count()
@@ -269,14 +254,7 @@ class SoakSpec extends SparkTestBase {
           expr(s"$fillBase + ((doc_id - $fillBase) DIV 4) * 4")).count()
       assert(wrongFill == 0, s"$wrongFill filler nodes in the wrong cluster")
 
-      // drain the listener bus before reading the stage log
-      Thread.sleep(2000)
-      val log = stages.toArray(Array.empty[(Int, Int, Long)])
-      val violations = log.filter { case (_, tasks, bytes) =>
-        tasks == 1 && bytes > SingleTaskShuffleBudget }
-      assert(violations.isEmpty,
-        s"single-task stages read relation-sized shuffles: ${violations.mkString(", ")}")
-      val maxSingle = log.filter(_._2 == 1).map(_._3).maxOption.getOrElse(0L)
+      val maxSingle = assertShuffleBudget(log)
 
       val ratio = calRatio()
       val section =
@@ -294,7 +272,7 @@ class SoakSpec extends SparkTestBase {
            |""".stripMargin
       SoakDoc.upsert(SoakDoc.Path,
         "Connected-components fixpoint", section)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   test("incremental dedup soak: 150k docs, 500-member hot cluster, exact survivors") {
@@ -342,16 +320,7 @@ class SoakSpec extends SparkTestBase {
       .select(col("doc_id"), col("nid"), textFor(col("cluster"), col("variant")).as("text"))
       .repartition(8)
 
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, Long)]()
-    val listener = new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        stages.add((si.stageId, si.numTasks,
-          si.taskMetrics.shuffleReadMetrics.totalBytesRead))
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    StageLog.record(spark) { log =>
       val t0 = System.nanoTime()
       val survivors = Dedup.dedupIncremental(newDocs.select(col("doc_id"), col("text")), existing)
         .select(col("doc_id")).collect().map(_.getLong(0)).toSet
@@ -369,12 +338,7 @@ class SoakSpec extends SparkTestBase {
         "the EVEN (earlier-id) member of every new↔new pair must survive")
       assert(nid(survivors, 30250, 50000) == 50000 - 30250, "singletons all survive")
 
-      Thread.sleep(2000) // drain the listener bus
-      val violations = stages.toArray(Array.empty[(Int, Int, Long)])
-        .filter { case (_, tasks, bytes) =>
-          tasks == 1 && bytes > SingleTaskShuffleBudget }
-      assert(violations.isEmpty,
-        s"single-task stages read relation-sized shuffles: ${violations.mkString(", ")}")
+      assertShuffleBudget(log)
 
       val ratio = calRatio()
       val section =
@@ -395,7 +359,7 @@ class SoakSpec extends SparkTestBase {
            |""".stripMargin
       SoakDoc.upsert(SoakDoc.Path,
         "Incremental dedup soak", section)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   test("span dedup soak: 300k docs, 100% boilerplate prefix, exact cleaned corpus") {
@@ -416,16 +380,7 @@ class SoakSpec extends SparkTestBase {
           .otherwise(concat(lit(boiler + " "), tailFor(col("id")))).as("text"))
       .repartition(8)
 
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, Long)]()
-    val listener = new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        stages.add((si.stageId, si.numTasks,
-          si.taskMetrics.shuffleReadMetrics.totalBytesRead))
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    StageLog.record(spark) { log =>
       val t0 = System.nanoTime()
       val cleaned = Dedup.dedupSpans(docs, 3, 2)
       val expected = spark.range(10000L, 300000L).select(col("id").as("doc_id"),
@@ -439,12 +394,7 @@ class SoakSpec extends SparkTestBase {
       assert(matched == 290000L,
         s"cleaned text diverges from the planted tails: $matched/290000 match")
 
-      Thread.sleep(2000) // drain the listener bus
-      val violations = stages.toArray(Array.empty[(Int, Int, Long)])
-        .filter { case (_, tasks, bytes) =>
-          tasks == 1 && bytes > SingleTaskShuffleBudget }
-      assert(violations.isEmpty,
-        s"single-task stages read relation-sized shuffles: ${violations.mkString(", ")}")
+      assertShuffleBudget(log)
 
       val ratio = calRatio()
       val section =
@@ -465,7 +415,7 @@ class SoakSpec extends SparkTestBase {
            |""".stripMargin
       SoakDoc.upsert(SoakDoc.Path,
         "Span dedup soak", section)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   test("BPE training soak: 1M word instances, planted first merge, monotone counts") {
@@ -487,16 +437,7 @@ class SoakSpec extends SparkTestBase {
       .select(col("id").as("doc_id"), col("text"))
       .repartition(8)
 
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, Long)]()
-    val listener = new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        stages.add((si.stageId, si.numTasks,
-          si.taskMetrics.shuffleReadMetrics.totalBytesRead))
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    StageLog.record(spark) { log =>
       val t0 = System.nanoTime()
       val merges = TextOps.bpeTrain(docs, 8)
         .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2),
@@ -517,12 +458,7 @@ class SoakSpec extends SparkTestBase {
         ((), (System.nanoTime() - t1) / 1e9)
       }
 
-      Thread.sleep(2000) // drain the listener bus
-      val violations = stages.toArray(Array.empty[(Int, Int, Long)])
-        .filter { case (_, tasks, bytes) =>
-          tasks == 1 && bytes > SingleTaskShuffleBudget }
-      assert(violations.isEmpty,
-        s"single-task stages read relation-sized shuffles: ${violations.mkString(", ")}")
+      assertShuffleBudget(log)
 
       val ratio = calRatio()
       val section =
@@ -544,7 +480,7 @@ class SoakSpec extends SparkTestBase {
            |""".stripMargin
       SoakDoc.upsert(SoakDoc.Path,
         "BPE training soak", section)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   test("ANN soak: 500k vectors through IVF-PQ, planted neighbors surface") {
@@ -573,16 +509,7 @@ class SoakSpec extends SparkTestBase {
         (x, j) => x + j / 100.0).as("v"))
     val emb = base.unionByName(plants).repartition(8)
 
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, Long)]()
-    val listener = new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        stages.add((si.stageId, si.numTasks,
-          si.taskMetrics.shuffleReadMetrics.totalBytesRead))
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    StageLog.record(spark) { log =>
       // deployment shape: quantizers train ONCE at ingest (k-means
       // refinement of centroids + codebooks) and every probe reuses
       // them — time the two phases separately, as a cluster would
@@ -601,12 +528,7 @@ class SoakSpec extends SparkTestBase {
       val found = plantIds.intersect(top.toSet).size
       assert(found == 10, s"$found/10 plants in top-16: ${top.toSeq}")
 
-      Thread.sleep(2000) // drain the listener bus
-      val violations = stages.toArray(Array.empty[(Int, Int, Long)])
-        .filter { case (_, tasks, bytes) =>
-          tasks == 1 && bytes > SingleTaskShuffleBudget }
-      assert(violations.isEmpty,
-        s"single-task stages read relation-sized shuffles: ${violations.mkString(", ")}")
+      assertShuffleBudget(log)
 
       val ratio = calRatio()
       val section =
@@ -628,7 +550,7 @@ class SoakSpec extends SparkTestBase {
            |""".stripMargin
       SoakDoc.upsert(SoakDoc.Path,
         "ANN / IVF-PQ soak", section)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   test("newcomer soak: weighted median / gini / event paths / null-safe join / batch dedup / payload stats at 3M rows") {
@@ -660,16 +582,7 @@ class SoakSpec extends SparkTestBase {
       (a, (System.nanoTime() - t0) / 1e9)
     }
 
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, Long)]()
-    val listener = new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        stages.add((si.stageId, si.numTasks,
-          si.taskMetrics.shuffleReadMetrics.totalBytesRead))
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    StageLog.record(spark) { log =>
       val n = 3000000L
 
       // ---- weighted median + gini under dominant-group skew ----
@@ -774,12 +687,7 @@ class SoakSpec extends SparkTestBase {
       assert(st.getLong(4) == 30L * st.getLong(5),
         s"bytes_total ${st.getLong(4)} != 30 × bytes_stored ${st.getLong(5)}")
 
-      Thread.sleep(2000) // drain the listener bus
-      val violations = stages.toArray(Array.empty[(Int, Int, Long)])
-        .filter { case (_, tasks, bytes) =>
-          tasks == 1 && bytes > SingleTaskShuffleBudget }
-      assert(violations.isEmpty,
-        s"single-task stages read relation-sized shuffles: ${violations.mkString(", ")}")
+      assertShuffleBudget(log)
 
       val ratio = calRatio()
       val section =
@@ -818,7 +726,7 @@ class SoakSpec extends SparkTestBase {
            |""".stripMargin
       SoakDoc.upsert(SoakDoc.Path,
         "Round-9 newcomer soak", section)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   test("newcomer soak r10: fuzzy join / TWA / rolling median / markov / decay / intervals / active users at 3M rows") {
@@ -847,16 +755,7 @@ class SoakSpec extends SparkTestBase {
       val a = body
       (a, (System.nanoTime() - t0) / 1e9)
     }
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, Long)]()
-    val listener = new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        stages.add((si.stageId, si.numTasks,
-          si.taskMetrics.shuffleReadMetrics.totalBytesRead))
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    StageLog.record(spark) { log =>
       val n = 3000000L
 
       // ---- blocked fuzzy join: 1M rows, all-pairs-in-block plant ----
@@ -968,12 +867,7 @@ class SoakSpec extends SparkTestBase {
       }
       assert(au.toSeq == auExpect, s"active users head: ${au.take(8).toSeq}")
 
-      Thread.sleep(2000) // drain the listener bus
-      val violations = stages.toArray(Array.empty[(Int, Int, Long)])
-        .filter { case (_, tasks, bytes) =>
-          tasks == 1 && bytes > SingleTaskShuffleBudget }
-      assert(violations.isEmpty,
-        s"single-task stages read relation-sized shuffles: ${violations.mkString(", ")}")
+      assertShuffleBudget(log)
 
       val ratio = calRatio()
       val section =
@@ -1013,7 +907,7 @@ class SoakSpec extends SparkTestBase {
            |""".stripMargin
       SoakDoc.upsert(SoakDoc.Path,
         "Round-10 newcomer soak", section)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   test("adversarial soak r11: flash-crowd bucket / oversized fuzzy block / dominant asof user / bitmap cardinality / label-skewed negatives") {
@@ -1043,16 +937,7 @@ class SoakSpec extends SparkTestBase {
       val a = body
       (a, (System.nanoTime() - t0) / 1e9)
     }
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, Long)]()
-    val listener = new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        stages.add((si.stageId, si.numTasks,
-          si.taskMetrics.shuffleReadMetrics.totalBytesRead))
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    StageLog.record(spark) { log =>
       // ---- interval-overlap flash crowd: one hot bucket ----
       val hourUs = 3600L * 1000000
       val hot = spark.range(2000).select(col("id").as("u"),
@@ -1172,12 +1057,7 @@ class SoakSpec extends SparkTestBase {
       assert(neg == Map(false -> 80000L, true -> 40000L),
         s"negatives by anchor class (major, minor): $neg")
 
-      Thread.sleep(2000) // drain the listener bus
-      val violations = stages.toArray(Array.empty[(Int, Int, Long)])
-        .filter { case (_, tasks, bytes) =>
-          tasks == 1 && bytes > SingleTaskShuffleBudget }
-      assert(violations.isEmpty,
-        s"single-task stages read relation-sized shuffles: ${violations.mkString(", ")}")
+      assertShuffleBudget(log)
 
       val ratio = calRatio()
       val section =
@@ -1234,7 +1114,7 @@ class SoakSpec extends SparkTestBase {
            |""".stripMargin
       SoakDoc.upsert(SoakDoc.Path,
         "Round-11 adversarial soak", section)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   test("newcomer soak r11b: rank-sum / label propagation / Holt / vocab growth at scale") {
@@ -1262,16 +1142,7 @@ class SoakSpec extends SparkTestBase {
       val a = body
       (a, (System.nanoTime() - t0) / 1e9)
     }
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, Long)]()
-    val listener = new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        stages.add((si.stageId, si.numTasks,
-          si.taskMetrics.shuffleReadMetrics.totalBytesRead))
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    StageLog.record(spark) { log =>
       // ---- Mann-Whitney: 1M-row distinct-value rank grid ----
       val mwIn = spark.range(3000000L).select(
         col("id").as("event_id"),
@@ -1349,12 +1220,7 @@ class SoakSpec extends SparkTestBase {
       }
       assert(vg.toSeq == vgExpect, s"got ${vg.toSeq}")
 
-      Thread.sleep(2000) // drain the listener bus
-      val violations = stages.toArray(Array.empty[(Int, Int, Long)])
-        .filter { case (_, tasks, bytes) =>
-          tasks == 1 && bytes > SingleTaskShuffleBudget }
-      assert(violations.isEmpty,
-        s"single-task stages read relation-sized shuffles: ${violations.mkString(", ")}")
+      assertShuffleBudget(log)
 
       val ratio = calRatio()
       val section =
@@ -1388,7 +1254,7 @@ class SoakSpec extends SparkTestBase {
            |""".stripMargin
       SoakDoc.upsert(SoakDoc.Path,
         "Round-11 newcomer soak", section)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   test("newcomer soak r11c: BFS / top-share / ACF + runs / seasonality / containment at scale") {
@@ -1420,16 +1286,7 @@ class SoakSpec extends SparkTestBase {
       val a = body
       (a, (System.nanoTime() - t0) / 1e9)
     }
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, Long)]()
-    val listener = new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        stages.add((si.stageId, si.numTasks,
-          si.taskMetrics.shuffleReadMetrics.totalBytesRead))
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    StageLog.record(spark) { log =>
       // ---- BFS: 250k-node path, seeds every 100 ----
       val pathEdges = spark.range(250000L)
         .select(col("id").as("src"), (col("id") + 1L).as("dst"))
@@ -1533,12 +1390,7 @@ class SoakSpec extends SparkTestBase {
       }
       assert(cont == ((0L, 75000L)), s"(bad, total) = $cont")
 
-      Thread.sleep(2000) // drain the listener bus
-      val violations = stages.toArray(Array.empty[(Int, Int, Long)])
-        .filter { case (_, tasks, bytes) =>
-          tasks == 1 && bytes > SingleTaskShuffleBudget }
-      assert(violations.isEmpty,
-        s"single-task stages read relation-sized shuffles: ${violations.mkString(", ")}")
+      assertShuffleBudget(log)
 
       val ratio = calRatio()
       val section =
@@ -1576,7 +1428,7 @@ class SoakSpec extends SparkTestBase {
            |""".stripMargin
       SoakDoc.upsert(SoakDoc.Path,
         "Round-11 late-newcomer soak", section)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   test("newcomer soak r11d: M4 downsample / k-core peel / monthly growth at scale") {
@@ -1604,16 +1456,7 @@ class SoakSpec extends SparkTestBase {
       val a = body
       (a, (System.nanoTime() - t0) / 1e9)
     }
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, Long)]()
-    val listener = new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        stages.add((si.stageId, si.numTasks,
-          si.taskMetrics.shuffleReadMetrics.totalBytesRead))
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    StageLog.record(spark) { log =>
       // ---- M4: 1k series × 3 days × 1k points, value a per-bucket permutation ----
       val m4In = spark.range(3000000L).select(
         col("id").as("event_id"),
@@ -1694,12 +1537,7 @@ class SoakSpec extends SparkTestBase {
       // the hole NULLs exactly month-61 MoM and the lag-12-crossing YoYs
       assert(gr(("PR0", 2000L, 2L))._2.isEmpty && gr(("PR0", 2000L, 2L))._3.isEmpty)
 
-      Thread.sleep(2000) // drain the listener bus
-      val violations = stages.toArray(Array.empty[(Int, Int, Long)])
-        .filter { case (_, tasks, bytes) =>
-          tasks == 1 && bytes > SingleTaskShuffleBudget }
-      assert(violations.isEmpty,
-        s"single-task stages read relation-sized shuffles: ${violations.mkString(", ")}")
+      assertShuffleBudget(log)
 
       val ratio = calRatio()
       val section =
@@ -1733,7 +1571,7 @@ class SoakSpec extends SparkTestBase {
            |""".stripMargin
       SoakDoc.upsert(SoakDoc.Path,
         "Round-11 close-out soak", section)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   test("newcomer soak r11e: drawdown / volatility / change-point / Poisson / business days / Pareto cut / skyline / LTV at scale") {
@@ -1765,16 +1603,7 @@ class SoakSpec extends SparkTestBase {
       val a = body
       (a, (System.nanoTime() - t0) / 1e9)
     }
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, Long)]()
-    val listener = new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        stages.add((si.stageId, si.numTasks,
-          si.taskMetrics.shuffleReadMetrics.totalBytesRead))
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    StageLog.record(spark) { log =>
       // shared event-shaped fixture maker: 1,000 series × 3,000 points
       def series(valueExpr: String, secondsApart: Boolean): org.apache.spark.sql.DataFrame =
         spark.range(3000000L).select(
@@ -1965,12 +1794,7 @@ class SoakSpec extends SparkTestBase {
       }
       assert(gu == ((0L, 1000L)), s"(bad, series) = $gu")
 
-      Thread.sleep(2000) // drain the listener bus
-      val violations = stages.toArray(Array.empty[(Int, Int, Long)])
-        .filter { case (_, tasks, bytes) =>
-          tasks == 1 && bytes > SingleTaskShuffleBudget }
-      assert(violations.isEmpty,
-        s"single-task stages read relation-sized shuffles: ${violations.mkString(", ")}")
+      assertShuffleBudget(log)
 
       val ratio = calRatio()
       val section =
@@ -2027,7 +1851,7 @@ class SoakSpec extends SparkTestBase {
            |""".stripMargin
       SoakDoc.upsert(SoakDoc.Path,
         "Round-11 final-newcomer soak", section)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   test("streaming RocksDB state soak: 3M events, 100k keys, bounded store, rows == keys") {
@@ -2116,16 +1940,7 @@ class SoakSpec extends SparkTestBase {
     val chunks = Array(10, 50, 75)    // 5*4*4 = 80 chunks of 37.5k elems
     val dir = graft.sources.IO.tmp("graft_zarr_soak_") + "/cube"
 
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, Long)]()
-    val listener = new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        stages.add((si.stageId, si.numTasks,
-          si.taskMetrics.shuffleReadMetrics.totalBytesRead))
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    StageLog.record(spark) { log =>
       val rows = spark.range(0L, t * y * x).select(
         expr(s"id div ${y * x}").as("t"),
         expr(s"(id div $x) % $y").as("y"),
@@ -2152,12 +1967,7 @@ class SoakSpec extends SparkTestBase {
       assert(sliced.count() == 10 * y * x)
       val tSlice = (System.nanoTime() - t2) / 1e9
 
-      Thread.sleep(2000) // drain the listener bus
-      val violations = stages.toArray(Array.empty[(Int, Int, Long)])
-        .filter { case (_, tasks, bytes) =>
-          tasks == 1 && bytes > SingleTaskShuffleBudget }
-      assert(violations.isEmpty,
-        s"single-task stages read relation-sized shuffles: ${violations.mkString(", ")}")
+      assertShuffleBudget(log)
 
       val ratio = calRatio()
       val section =
@@ -2175,7 +1985,7 @@ class SoakSpec extends SparkTestBase {
            |""".stripMargin
       SoakDoc.upsert(SoakDoc.Path,
         "Zarr connector soak", section)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   test("staged malformed split soak: 3M dirty rows parsed once, source never re-read") {
@@ -2202,16 +2012,7 @@ class SoakSpec extends SparkTestBase {
         org.apache.spark.sql.types.DoubleType)))
       .add(IO.CorruptCol, org.apache.spark.sql.types.StringType)
 
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, Long)]()
-    val listener = new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        stages.add((si.stageId, si.numTasks,
-          si.taskMetrics.shuffleReadMetrics.totalBytesRead))
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    StageLog.record(spark) { log =>
       val staging = IO.tmp("graft_stagedsoak_stage_")
       val parsed = spark.read.option("mode", "PERMISSIVE")
         .schema(schema).csv(srcDir)
@@ -2233,12 +2034,7 @@ class SoakSpec extends SparkTestBase {
       val sample = quarantine0.select(IO.CorruptCol).head.getString(0)
       assert(sample.contains("broken-line-no-arity"), sample)
 
-      Thread.sleep(2000)
-      val violations = stages.toArray(Array.empty[(Int, Int, Long)])
-        .filter { case (_, tasks, bytes) =>
-          tasks == 1 && bytes > SingleTaskShuffleBudget }
-      assert(violations.isEmpty,
-        s"single-task stages read relation-sized shuffles: ${violations.mkString(", ")}")
+      assertShuffleBudget(log)
 
       val ratio = calRatio()
       val section =
@@ -2258,7 +2054,7 @@ class SoakSpec extends SparkTestBase {
            |""".stripMargin
       SoakDoc.upsert(SoakDoc.Path,
         "Staged malformed split soak", section)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   test("newcomer soak r12: paired stats / graph lcc+assortativity / Holt-Winters replay / decompose / theil+counts / k-center at scale") {
@@ -2295,16 +2091,7 @@ class SoakSpec extends SparkTestBase {
       val a = body
       (a, (System.nanoTime() - t0) / 1e9)
     }
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, Long)]()
-    val listener = new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        stages.add((si.stageId, si.numTasks,
-          si.taskMetrics.shuffleReadMetrics.totalBytesRead))
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    StageLog.record(spark) { log =>
       // ---- A: paired stream → spearman / wilcoxon / rolling corr ----
       val paired = spark.range(3000000L).select(
         col("id").as("event_id"),
@@ -2451,12 +2238,7 @@ class SoakSpec extends SparkTestBase {
       assert(radii.sliding(2).forall(p => p(0) >= p(1)),
         s"greedy max-min radii must be non-increasing: ${radii.toSeq}")
 
-      Thread.sleep(2000) // drain the listener bus
-      val violations = stages.toArray(Array.empty[(Int, Int, Long)])
-        .filter { case (_, tasks, bytes) =>
-          tasks == 1 && bytes > SingleTaskShuffleBudget }
-      assert(violations.isEmpty,
-        s"single-task stages read relation-sized shuffles: ${violations.mkString(", ")}")
+      assertShuffleBudget(log)
 
       val ratio = calRatio()
       val section =
@@ -2501,7 +2283,7 @@ class SoakSpec extends SparkTestBase {
            |""".stripMargin
       SoakDoc.upsert(SoakDoc.Path,
         "Round-12 newcomer soak", section)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   test("newcomer soak r14: log-rank / McNemar / BH-FDR battery / sharded zarr sink at scale") {
@@ -2528,16 +2310,7 @@ class SoakSpec extends SparkTestBase {
       val a = body
       (a, (System.nanoTime() - t0) / 1e9)
     }
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, Long)]()
-    val listener = new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        stages.add((si.stageId, si.numTasks,
-          si.taskMetrics.shuffleReadMetrics.totalBytesRead))
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    StageLog.record(spark) { log =>
       // ---- A: symmetric-arm survival stream -> log-rank chi2 = 0 ----
       // 1M users view on day u%500; users with bit1 = 0 purchase 3
       // days later. No censored span falls below 3 (502−499), so the
@@ -2653,12 +2426,7 @@ class SoakSpec extends SparkTestBase {
       assert(sliced.rdd.getNumPartitions == 500) // 1 of 6 t-shards
       assert(sliced.count() == 50L * sy * sx)
 
-      Thread.sleep(2000) // drain the listener bus
-      val violations = stages.toArray(Array.empty[(Int, Int, Long)])
-        .filter { case (_, tasks, bytes) =>
-          tasks == 1 && bytes > SingleTaskShuffleBudget }
-      assert(violations.isEmpty,
-        s"single-task stages read relation-sized shuffles: ${violations.mkString(", ")}")
+      assertShuffleBudget(log)
 
       val ratio = calRatio()
       val section =
@@ -2683,6 +2451,6 @@ class SoakSpec extends SparkTestBase {
            |""".stripMargin
       SoakDoc.upsert(SoakDoc.Path,
         "Round-14 newcomer soak", section)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 /** Z-order layout evidence: the clustered write must make the SAME box
@@ -67,23 +66,12 @@ class ZorderSpec extends SparkTestBase {
     grid.withColumn("z", lit(0L)).repartition(16)
       .write.mode("overwrite").parquet(rrDir)
 
-    val read = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          read.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-    }
-    def boxCount(dir: String): (Long, Long) = {
-      spark.sparkContext.addSparkListener(listener)
-      read.set(0L)
-      try {
-        val n = spark.read.parquet(dir)
-          .filter(col("lat").between(-10.0, 10.0) &&
-            col("lon").between(-20.0, 20.0))
-          .count()
-        Thread.sleep(2000) // drain the listener bus (SoakSpec pattern)
-        (n, read.get())
-      } finally spark.sparkContext.removeSparkListener(listener)
+    def boxCount(dir: String): (Long, Long) = StageLog.record(spark) { log =>
+      val n = spark.read.parquet(dir)
+        .filter(col("lat").between(-10.0, 10.0) &&
+          col("lon").between(-20.0, 20.0))
+        .count()
+      (n, log.stages.map(_.inputRecords).sum)
     }
     val (nZ, readZ) = boxCount(zDir)
     val (nRR, readRR) = boxCount(rrDir)
