@@ -364,11 +364,13 @@ object Climate {
     * parallelism at all; a real archive has the same shape whenever one
     * period dominates). Each per-shard collect_list then holds at most
     * `maxPerDoc` features and the (year,month,shard) aggregate fans out
-    * across tasks; the per-shard array_sort rebuilds document order
-    * over a bounded array, so no single value nears Spark's 2 GB
-    * ceiling however large a month grows. `orderCol` must be unique
-    * within a month (it already must be for the document order itself
-    * to be deterministic). */
+    * across tasks; the per-shard sort rebuilds document order over a
+    * bounded array, so no single value nears Spark's 2 GB ceiling
+    * however large a month grows. The sort and join are native
+    * (sort_array, a struct-field projection, concat_ws): no lambda or
+    * array_sort comparator, which Spark evaluates interpreted per
+    * element. `orderCol` must be unique within a month (it already must
+    * be for the document order itself to be deterministic). */
   def featureCollection(df: DataFrame, featureCol: String,
       orderCol: String, maxPerDoc: Int = MaxFeaturesPerDoc): DataFrame = {
     // lazy-pin form: dry-run plans the real composites, and the dry-run
@@ -379,11 +381,9 @@ object Climate {
     ranked
       .withColumn("shard", ((col("_rnk") - 1) / maxPerDoc).cast("int"))
       .groupBy(col("year"), col("month"), col("shard"))
-      .agg(array_join(
-        transform(
-          array_sort(collect_list(struct(col(orderCol), col(featureCol)))),
-          p => p.getField(featureCol)),
-        ",").as("features_joined"))
+      .agg(concat_ws(",",
+        sort_array(collect_list(struct(col(orderCol), col(featureCol))))
+          .getField(featureCol)).as("features_joined"))
       .select(col("year"), col("month"), col("shard"),
         concat(lit("{\"type\":\"FeatureCollection\",\"features\":["),
           col("features_joined"), lit("]}")).as("collection"))
@@ -485,7 +485,9 @@ object Climate {
     * (:104,:131 — one idempotent null filter here), then each month's
     * document re-parsed and checked non-empty exactly as
     * validate_geojson does (:95-110): parse -> count features ->
-    * valid = count > 0. */
+    * valid = count > 0. The sort comes BEFORE the validation: a range
+    * sort evaluates its input twice (sampling job, then shuffle map), so
+    * validating above it parses each document once. */
   private def humidityFeats(s: SparkSession, dir: String): DataFrame =
     monthlyMasked(s, dir)
       .select(col("year"), col("month"), col("event_id"),
@@ -493,12 +495,14 @@ object Climate {
           col("ts"), col("lat_res") / 2, col("lon_res") / 2).as("feature"))
 
   def humidityComposite(s: SparkSession, dir: String): DataFrame =
-    featureCollection(humidityFeats(s, dir), "feature", "event_id")
-      .select(col("year"), col("month"), col("shard"), col("collection"),
-        json_array_length(get_json_object(col("collection"), "$.features"))
-          .cast("long").as("n_features"))
+    validated(featureCollection(humidityFeats(s, dir), "feature", "event_id"))
+
+  /** validate_geojson (humidity_pipeline.py:95-110) over the sorted documents. */
+  private def validated(docs: DataFrame): DataFrame =
+    docs.orderBy(col("year"), col("month"), col("shard"))
+      .withColumn("n_features",
+        json_array_length(get_json_object(col("collection"), "$.features")).cast("long"))
       .withColumn("valid", col("n_features") > 0)
-      .orderBy(col("year"), col("month"), col("shard"))
 
   /** The precipitation pipeline's output frame: the end-to-end climate
     * composite (SURVEY §7.3 step 6) as ONE lazy plan, which
@@ -2345,12 +2349,7 @@ object Climate {
         .select(col("year"), col("month"), col("event_id"),
           temperatureFeature(col("lat"), col("lon"), round(col("value"), 4),
             col("ts"), lit(0.25), lit(0.3125)).as("feature"))
-      featureCollection(feats, "feature", "event_id")
-        .select(col("year"), col("month"), col("shard"),
-          json_array_length(get_json_object(col("collection"), "$.features"))
-            .cast("long").as("n_features"))
-        .withColumn("valid", col("n_features") > 0)
-        .orderBy(col("year"), col("month"), col("shard"))
+      validated(featureCollection(feats, "feature", "event_id")).drop("collection")
     }),
   )
 

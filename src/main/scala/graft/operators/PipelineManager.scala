@@ -66,8 +66,8 @@ object PipelineManager {
     def allSucceeded: Boolean = successCount == results.size
   }
 
-  /** Run `pipelines` concurrently on `s`, at most `parallelism` at a
-    * time; always returns one result per pipeline, in input order.
+  /** Run `pipelines` on `s`, all starting at once (one driver thread
+    * each); always returns one result per pipeline, in input order.
     *
     * `timeout` is the whole run's deadline (the engine analog of the
     * reference's PIPELINE_TIMEOUT=7200 budget, pipeline_config.py:51,
@@ -76,23 +76,22 @@ object PipelineManager {
     * deadline has its job group cancelled (running Spark tasks
     * interrupted), its DRIVER thread interrupted (non-Spark driver
     * work — a parse loop, a blocking client call — stops too, not just
-    * cluster tasks), and is tallied as a `timeout` failure; a pipeline
-    * still QUEUED behind the parallelism limit at the deadline is
-    * flagged so its body never starts. A hung pipeline can delay the
+    * cluster tasks), and is tallied as a `timeout` failure; a body not
+    * started by the deadline never starts. A hung pipeline can delay the
     * summary, never block it forever — and a timed-out pipeline's side
     * effects (e.g. an overwrite sink) cannot land after the summary
     * unless the body swallows the interrupt, which the scaladoc of
     * `pipelines` forbids. */
   def runAll(s: SparkSession, pipelines: Seq[(String, () => Unit)],
-      parallelism: Int = 3, timeout: Duration = Duration.Inf,
+      timeout: Duration = Duration.Inf,
       retry: RetryPolicy = NoRetry,
       isFatal: Throwable => Boolean = defaultIsFatal): RunSummary = {
     import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, parallelism))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, pipelines.size))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    // the ONE deadline, fixed before anything is submitted: a queued
-    // pipeline checks it directly at start, so "never starts past the
-    // deadline" holds even before the results loop reaches its entry
+    // the ONE deadline, fixed before anything is submitted: each body
+    // checks it directly at start, so "never starts past the deadline"
+    // holds even before the results loop reaches its entry
     val deadline = if (timeout.isFinite) Some(System.nanoTime + timeout.toNanos) else None
     def deadlinePassed: Boolean = deadline.exists(System.nanoTime >= _)
     try {

@@ -112,6 +112,27 @@ class ClimateSpec extends SparkTestBase {
     assert(unsharded.forall(_._2 == 0))
   }
 
+  test("featureCollection: shuffled parts reassemble in the order column's numeric order") {
+    // 2 < 9 < 10 < 100 as numbers but "10" < "100" < "2" < "9" as
+    // strings: the per-part sort must follow orderCol's own type
+    val ids = Seq(100L, 2L, 10L, 9L, 1000L, 21L, 3L)
+    val rows = ids.flatMap(i => Seq((2024, 1, i), (2024, 2, i + 1)))
+    val feats = new scala.util.Random(7).shuffle(rows)
+      .map { case (y, m, i) => (y, m, i, s"""{"f":$i}""") }
+      .toDF("year", "month", "event_id", "feature").repartition(4)
+    val parts = Climate.featureCollection(feats, "feature", "event_id", 2)
+      .collect().map(r => (r.getInt(1), r.getInt(2),
+        r.getString(3).stripPrefix("""{"type":"FeatureCollection","features":[""")
+          .stripSuffix("]}")))
+      .toSeq
+    parts.foreach { case (_, _, body) => assert(body.split(",").length <= 2, body) }
+    val reassembled = parts.groupBy(_._1).view
+      .mapValues(_.sortBy(_._2).map(_._3).mkString(",")).toMap
+    val expected = rows.groupBy(_._2).view
+      .mapValues(_.map(_._3).sorted.map(i => s"""{"f":$i}""").mkString(",")).toMap
+    assert(reassembled == expected)
+  }
+
   test("featureCollection: distributed rank, no whole-month window") {
     val feats = (1L to 100L).map(i => (2024, 1, i, s"f$i"))
       .toDF("year", "month", "event_id", "feature")

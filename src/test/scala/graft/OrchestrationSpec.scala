@@ -34,6 +34,19 @@ class OrchestrationSpec extends SparkTestBase {
       Seq("collection", "month", "n_features", "shard", "valid", "year"))
   }
 
+  test("runAll starts every pipeline at once: four bodies meet at one latch") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    // each body waits for all four to have started: with fewer threads
+    // than pipelines the last one queues and the others time out
+    val started = new CountDownLatch(4)
+    val summary = PipelineManager.runAll(spark, (1 to 4).map(i => s"p$i" -> (() => {
+      started.countDown()
+      if (!started.await(30, TimeUnit.SECONDS))
+        throw new IllegalStateException(s"only ${4 - started.getCount} of 4 started")
+    })))
+    assert(summary.allSucceeded && summary.successCount == 4, summary)
+  }
+
   test("a hung pipeline is cancelled at the deadline; siblings still complete") {
     import scala.concurrent.duration._
     val out = java.nio.file.Files.createTempDirectory("graft_orch_hang").toString

@@ -781,6 +781,31 @@ class PlanSpec extends SparkTestBase {
     }
   }
 
+  test("document validation parses above the sort's range exchange, never beneath it") {
+    // a range-partitioned sort evaluates its input twice (the sampling
+    // job, then the shuffle map): a parse beneath the exchange parses
+    // every document twice
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    def parses(p: SparkPlan): Boolean =
+      helper.find(p)(_.expressions.exists(_.toString.contains("get_json_object"))).isDefined
+    Seq("q_humidity_composite", "q_geojson_validate").foreach { q =>
+      // the plan as submitted: at this tiny scale AQE's runtime row
+      // counts can drop the one-document sort from the final plan
+      val plan = SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan
+      val ranges = helper.collect(plan) {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+      }
+      assert(ranges.nonEmpty, s"$q has no range exchange:\n$plan")
+      assert(parses(plan), s"$q never parses its documents:\n$plan")
+      ranges.foreach(e =>
+        assert(!parses(e.child), s"$q parses beneath the range exchange:\n$plan"))
+    }
+  }
+
   test("q_fn_explode: the row filter pushes below the generator into the scan") {
     val plan = executed("q_fn_explode")
     assert(plan.contains("LessThan(vec_id,20)"),
