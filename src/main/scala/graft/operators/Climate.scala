@@ -89,6 +89,13 @@ object Climate {
     * subtree once for ALL axes — at 100 TB that is the difference
     * between one scan and N.
     *
+    * The form for CONTINUOUS columns (e.g. `q_agg_min_diff` over
+    * `c_acctbal`), whose distinct set is unbounded. A coordinate axis
+    * of a measurement grid has a bounded distinct set and takes the
+    * one-aggregate [[axisResolutions]] instead: this chain costs nine
+    * serial stages, which made it the precipitation pipeline's
+    * critical path.
+    *
     * Distributed form — NO single-task window over the distinct set
     * (whose cardinality can approach the table's, e.g. a continuous
     * column): distinct values are range-bucketed by per-axis
@@ -126,6 +133,30 @@ object Climate {
       .agg(round(least(min(col("min_gap")), min(col("boundary_gap"))), 4).as("res"))
     val res = resolutionColumns(axes)
     perAxis.agg(res.head, res.tail: _*)
+  }
+
+  /** Resolution inference for GRID axes in one global aggregate: per
+    * axis the sorted distinct set (`array_sort(collect_set(...))`),
+    * then on that one row the rounded min gap between adjacent
+    * elements, or the axis default when it has fewer than two distinct
+    * values (an empty input gives every default). One row with one
+    * `<axis>_res` column per axis, equal to [[gridResolutions]]'s.
+    *
+    * Scale posture: the aggregate buffer is the axis's distinct set,
+    * whose size is the grid's axis length (360 or 576 values here,
+    * 3600 at 0.1°), independent of row volume — the bound
+    * [[monthlyResolutions]] relies on per month. The partial aggregate
+    * runs in the input's own stage, so the whole inference is one
+    * exchange to a single partition; no driver collect, and building
+    * it launches no job. Not for continuous columns: there the set
+    * grows with the data ([[gridResolutions]]). */
+  private[graft] def axisResolutions(df: DataFrame,
+      axes: Seq[(String, Double)]): DataFrame = {
+    val sets = axes.map { case (c, _) => array_sort(collect_set(col(c).cast("double"))).as(c) }
+    df.agg(sets.head, sets.tail: _*).select(axes.map { case (c, d) =>
+      // zip_with pads the one-shorter tail with a NULL, which array_min skips
+      val gaps = zip_with(slice(col(c), lit(2), size(col(c))), col(c), (hi, lo) => hi - lo)
+      coalesce(round(array_min(gaps), 4), lit(d)).as(s"${c}_res") }: _*)
   }
 
   /** Folds (axis, res) rows into one `<axis>_res` column per axis: the
@@ -412,13 +443,16 @@ object Climate {
       landCells(s, dir))
   }
 
-  /** Shared composite plan: the 2024 masked grid -> distributed
-    * resolution inference (broadcast 1-row aggregates, no driver
-    * collect) -> feature build. */
+  /** Shared composite plan: the 2024 masked grid -> resolution
+    * inference (one broadcast 1-row aggregate, no driver collect) ->
+    * feature build. Both axes come from ONE global aggregate
+    * ([[axisResolutions]]): lat and lon are grid axes, so their
+    * distinct sets are bounded and the bucketed [[gridResolutions]]
+    * chain (distinct, quantile bounds, two windows, folds: nine serial
+    * stages that the feature sink waited on) buys nothing here. */
   private[operators] def compositeFrame(s: SparkSession, dir: String): DataFrame = {
     val masked = maskedGrid(s, dir, 2024, 1, 2024, 12)
-    // both axes inferred in one pass over `masked` (vs one scan per axis)
-    val res = gridResolutions(masked, Seq("lat" -> 0.5, "lon" -> 0.625))
+    val res = axisResolutions(masked, Seq("lat" -> 0.5, "lon" -> 0.625))
     withYearMonth(masked.crossJoin(broadcast(res)), "ts")
       .select(col("event_id"), col("year"), col("month"),
         geojsonFeature(col("lat"), col("lon"), round(col("value"), 4), "precipitation",
@@ -429,7 +463,9 @@ object Climate {
     * and temperature pipelines' split-then-infer order: each monthly
     * file infers its own grid resolution from ITS distinct coordinates
     * (humidity_pipeline.py:136-139, temperature_pipeline.py:102-105),
-    * unlike the global inference in [[gridResolutions]].
+    * unlike the global inference of the precipitation pipeline
+    * ([[axisResolutions]] in [[compositeFrame]]), which infers one
+    * resolution over the whole year.
     *
     * Scale posture: the window input is the DISTINCT
     * (year, month, axis, value) set, whose per-month cardinality is the
@@ -485,9 +521,11 @@ object Climate {
     * (:104,:131 — one idempotent null filter here), then each month's
     * document re-parsed and checked non-empty exactly as
     * validate_geojson does (:95-110): parse -> count features ->
-    * valid = count > 0. The sort comes BEFORE the validation: a range
-    * sort evaluates its input twice (sampling job, then shuffle map), so
-    * validating above it parses each document once. */
+    * valid = count > 0 ([[validated]]). Each document is parsed ONCE:
+    * the sort comes BEFORE the validation, because a range sort
+    * evaluates its input twice (sampling job, then shuffle map), and
+    * the count reads the features array in the same parse instead of
+    * re-serializing it for a second one. */
   private def humidityFeats(s: SparkSession, dir: String): DataFrame =
     monthlyMasked(s, dir)
       .select(col("year"), col("month"), col("event_id"),
@@ -497,11 +535,26 @@ object Climate {
   def humidityComposite(s: SparkSession, dir: String): DataFrame =
     validated(featureCollection(humidityFeats(s, dir), "feature", "event_id"))
 
-  /** validate_geojson (humidity_pipeline.py:95-110) over the sorted documents. */
-  private def validated(docs: DataFrame): DataFrame =
+  /** Element schema of [[validated]]'s parse: only each feature's
+    * `type`, so Jackson skips the rest of every feature's body. An
+    * `array<string>` element schema would re-serialize every feature
+    * (r17 measured that form slower than the two-parse count). */
+  private val FeatureTypes = "features array<struct<type: string>>"
+
+  /** validate_geojson (humidity_pipeline.py:95-110) over the sorted
+    * documents: `n_features` is the length of the `features` array,
+    * NULL when it is missing, not an array, or the document is
+    * malformed; `valid` is `n_features > 0`. ONE parse per document:
+    * `from_json` with a struct element schema reads the features array
+    * in place, where `json_array_length(get_json_object(...))` parsed
+    * the document, re-serialized the whole array and parsed that
+    * again. Features are `to_json(struct)` output, so every element is
+    * an object; a non-object element is outside this contract. */
+  private[graft] def validated(docs: DataFrame): DataFrame =
     docs.orderBy(col("year"), col("month"), col("shard"))
-      .withColumn("n_features",
-        json_array_length(get_json_object(col("collection"), "$.features")).cast("long"))
+      .withColumn("n_features", array_size(
+        from_json(col("collection"), FeatureTypes, Map.empty[String, String])
+          .getField("features")).cast("long"))
       .withColumn("valid", col("n_features") > 0)
 
   /** The precipitation pipeline's output frame: the end-to-end climate

@@ -19,6 +19,20 @@ package object graft {
       .config(Tables.NanosConf, "true")
       .config("spark.ui.enabled", "false")
 
+  /** Engine-independent half-up decimal rendering:
+    * `floor(x·10ⁿ + ½)/10ⁿ`. `round(double, n)` is NOT portable at .5
+    * boundaries even on bit-identical inputs (Spark rounds the
+    * shortest decimal repr, DuckDB the binary value — q_anomaly_mad
+    * caught a one-ulp flip at sf0.1); this form uses only
+    * exact-rounded IEEE ops, so any engine that mirrors the formula
+    * (the oracles do) renders the same digits. Use for every
+    * hash-checked double output; nulls pass through. */
+  def halfUp(c: org.apache.spark.sql.Column, n: Int): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{floor, lit}
+    val p = math.pow(10.0, n)
+    floor(c * lit(p) + lit(0.5)) / lit(p)
+  }
+
   /** Spread CPU-heavy narrow work across cores before it runs.
     *
     * The harness tables arrive as ONE parquet split, which pins any
@@ -34,20 +48,6 @@ package object graft {
     * artifact, not the plan shape. The shuffled rows are narrow; the
     * shuffle is trivial next to the per-row CPU it parallelizes.
     */
-  /** Engine-independent half-up decimal rendering:
-    * `floor(x·10ⁿ + ½)/10ⁿ`. `round(double, n)` is NOT portable at .5
-    * boundaries even on bit-identical inputs (Spark rounds the
-    * shortest decimal repr, DuckDB the binary value — q_anomaly_mad
-    * caught a one-ulp flip at sf0.1); this form uses only
-    * exact-rounded IEEE ops, so any engine that mirrors the formula
-    * (the oracles do) renders the same digits. Use for every
-    * hash-checked double output; nulls pass through. */
-  def halfUp(c: org.apache.spark.sql.Column, n: Int): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{floor, lit}
-    val p = math.pow(10.0, n)
-    floor(c * lit(p) + lit(0.5)) / lit(p)
-  }
-
   def spread(df: org.apache.spark.sql.DataFrame,
       keys: org.apache.spark.sql.Column*): org.apache.spark.sql.DataFrame = {
     val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt

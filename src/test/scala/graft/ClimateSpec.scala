@@ -82,6 +82,64 @@ class ClimateSpec extends SparkTestBase {
     assert(r.getDouble(0) == 0.5 && r.getDouble(1) == 0.625)
   }
 
+  test("axisResolutions (one aggregate) equals gridResolutions on every input shape") {
+    val axes = Seq("lat" -> 0.5, "lon" -> 0.625)
+    def resolutions(df: org.apache.spark.sql.DataFrame) = {
+      def pairs(r: org.apache.spark.sql.DataFrame) =
+        r.collect().map(row => (row.getDouble(0), row.getDouble(1))).toSeq
+      val one = pairs(Climate.axisResolutions(df, axes))
+      assert(one == pairs(Climate.gridResolutions(df, axes)), "differs from gridResolutions")
+      one
+    }
+    // unsorted, duplicated and negative coordinates (and a NULL, skipped)
+    val mixed = Seq[(Option[Double], Option[Double])](
+      (Some(3.0), Some(-180.0)), (Some(-1.5), Some(10.0)), (Some(3.0), Some(-178.75)),
+      (Some(-90.0), Some(10.0)), (Some(0.0), Some(-180.0)), (None, Some(10.0)))
+      .toDF("lat", "lon")
+    assert(resolutions(mixed) == Seq((1.5, 1.25)))
+    // irregular spacing: the smallest gap wins wherever it sits, rounded to 4 places
+    val irregular = Seq((0.0, 0.0), (0.7, 5.0), (2.0, 5.3), (2.25, 9.0)).toDF("lat", "lon")
+    assert(resolutions(irregular) == Seq((0.25, 0.3)))
+    // a single-value axis gets its default; the other axis still infers
+    val single = Seq((1.0, 0.0), (1.0, 2.5), (1.0, 1.25)).toDF("lat", "lon")
+    assert(resolutions(single) == Seq((0.5, 1.25)))
+    // an empty frame: one row, both defaults
+    assert(resolutions(Seq.empty[(Double, Double)].toDF("lat", "lon")) == Seq((0.5, 0.625)))
+  }
+
+  test("validated: the one-parse feature count equals json_array_length(get_json_object)") {
+    // features are to_json(struct) output, so every element is an
+    // object; non-object elements are outside the contract and not
+    // exercised here
+    val docs = Seq(
+      "normal" -> ("""{"type":"FeatureCollection","features":[{"type":"Feature",""" +
+        """"geometry":{"type":"Polygon","coordinates":[[[1.0,2.0],[3.0,4.0]]]},""" +
+        """"properties":{"a":[1,{"b":"]}"}]}},{"type":"Feature","properties":{}}]}"""),
+      "empty" -> """{"type":"FeatureCollection","features":[]}""",
+      "missing" -> """{"type":"FeatureCollection"}""",
+      "object" -> """{"type":"FeatureCollection","features":{"type":"Feature"}}""",
+      "truncated" -> """{"type":"FeatureCollection","features":[{"type":"Feature","geo""",
+      "null" -> null)
+    val df = docs.zipWithIndex.map { case ((_, d), i) => (2024, 1, i, d) }
+      .toDF("year", "month", "shard", "collection")
+    def byShard(out: org.apache.spark.sql.DataFrame) = out.collect()
+      .map(r => r.getAs[Int]("shard") ->
+        (Option(r.getAs[java.lang.Long]("n_features")).map(_.longValue),
+          Option(r.getAs[java.lang.Boolean]("valid")).map(_.booleanValue)))
+      .toMap
+    val onePass = byShard(Climate.validated(df))
+    val old = byShard(df
+      .withColumn("n_features",
+        json_array_length(get_json_object(col("collection"), "$.features")).cast("long"))
+      .withColumn("valid", col("n_features") > 0))
+    assert(onePass == old)
+    val named = docs.map(_._1).zipWithIndex.map { case (n, i) => n -> onePass(i) }.toMap
+    assert(named("normal") == (Some(2L), Some(true)))
+    assert(named("empty") == (Some(0L), Some(false)))
+    Seq("missing", "object", "truncated", "null").foreach(n =>
+      assert(named(n) == (None, None), n))
+  }
+
   test("featureCollection: oversized months split into bounded, reassemblable parts") {
     // month 1 has 5 features, month 2 has 2; bound = 2
     val df = (1L to 5L).map(i => (2024, 1, i, s"""{"f":$i}""")) ++

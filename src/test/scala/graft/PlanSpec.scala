@@ -790,8 +790,12 @@ class PlanSpec extends SparkTestBase {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val helper = new AdaptiveSparkPlanHelper {}
+    // either parse form: get_json_object, or from_json (JsonToStructs)
     def parses(p: SparkPlan): Boolean =
-      helper.find(p)(_.expressions.exists(_.toString.contains("get_json_object"))).isDefined
+      helper.find(p)(_.expressions.exists { e =>
+        val s = e.toString
+        s.contains("get_json_object") || s.contains("from_json")
+      }).isDefined
     Seq("q_humidity_composite", "q_geojson_validate").foreach { q =>
       // the plan as submitted: at this tiny scale AQE's runtime row
       // counts can drop the one-document sort from the final plan
@@ -859,6 +863,23 @@ class PlanSpec extends SparkTestBase {
     assert(exchanges.length == 3,
       s"expected 3 exchanges, got ${exchanges.length}:\n${exchanges.mkString("\n")}")
     assert(plan.contains("BroadcastHashJoin"), plan.take(1500))
+  }
+
+  test("q_climate_composite: grid resolution in one aggregate, no Window, 6 shuffles") {
+    val plan = executed("q_climate_composite")
+    val exchanges = plan.linesIterator
+      .filter(_.matches("\\(\\d+\\) Exchange.*")).toVector
+    // the resolution is one global collect_set aggregate, never the
+    // bucketed window chain (13 exchanges and 2 Windows when it was)
+    assert(!plan.contains("Window"), s"resolution inference windows:\n${plan.take(3000)}")
+    // exactly 6 shuffles, as submitted: per branch (resolution,
+    // features) one hash(event_id) spread, which prune different
+    // columns and so stay two exchanges, and one land-cell distinct
+    // (identical, listed twice before AQE reuses one at run time); the
+    // aggregate's single-partition exchange; the final range sort.
+    // A 7th means the resolution grew a stage back.
+    assert(exchanges.length == 6,
+      s"expected 6 exchanges, got ${exchanges.length}:\n${exchanges.mkString("\n")}")
   }
 
   test("q_join_range_bucketed: the keyless range join plans as an EQUI join on buckets") {
