@@ -135,28 +135,32 @@ object Climate {
     perAxis.agg(res.head, res.tail: _*)
   }
 
-  /** Resolution inference for GRID axes in one global aggregate: per
-    * axis the sorted distinct set (`array_sort(collect_set(...))`),
-    * then on that one row the rounded min gap between adjacent
-    * elements, or the axis default when it has fewer than two distinct
-    * values (an empty input gives every default). One row with one
-    * `<axis>_res` column per axis, equal to [[gridResolutions]]'s.
+  /** Resolution inference for GRID axes in one aggregate: per axis
+    * the sorted distinct set (`array_sort(collect_set(...))`), then on
+    * each result row the rounded min gap between adjacent elements, or
+    * the axis default when it has fewer than two distinct values (an
+    * empty input gives every default). Without `keys`, one row with
+    * one `<axis>_res` column per axis, equal to [[gridResolutions]]'s;
+    * with `keys`, one such row per key group, led by the key columns
+    * — the humidity and temperature pipelines infer each month's own
+    * grid (humidity_pipeline.py:136-139, temperature_pipeline.py:
+    * 102-105) with keys (year, month).
     *
     * Scale posture: the aggregate buffer is the axis's distinct set,
     * whose size is the grid's axis length (360 or 576 values here,
-    * 3600 at 0.1°), independent of row volume — the bound
-    * [[monthlyResolutions]] relies on per month. The partial aggregate
+    * 3600 at 0.1°), independent of row volume. The partial aggregate
     * runs in the input's own stage, so the whole inference is one
-    * exchange to a single partition; no driver collect, and building
-    * it launches no job. Not for continuous columns: there the set
-    * grows with the data ([[gridResolutions]]). */
+    * exchange; no driver collect, and building it launches no job.
+    * Not for continuous columns: there the set grows with the data
+    * ([[gridResolutions]]). */
   private[graft] def axisResolutions(df: DataFrame,
-      axes: Seq[(String, Double)]): DataFrame = {
+      axes: Seq[(String, Double)], keys: Seq[String] = Nil): DataFrame = {
     val sets = axes.map { case (c, _) => array_sort(collect_set(col(c).cast("double"))).as(c) }
-    df.agg(sets.head, sets.tail: _*).select(axes.map { case (c, d) =>
-      // zip_with pads the one-shorter tail with a NULL, which array_min skips
-      val gaps = zip_with(slice(col(c), lit(2), size(col(c))), col(c), (hi, lo) => hi - lo)
-      coalesce(round(array_min(gaps), 4), lit(d)).as(s"${c}_res") }: _*)
+    df.groupBy(keys.map(col): _*).agg(sets.head, sets.tail: _*)
+      .select(keys.map(col) ++ axes.map { case (c, d) =>
+        // zip_with pads the one-shorter tail with a NULL, which array_min skips
+        val gaps = zip_with(slice(col(c), lit(2), size(col(c))), col(c), (hi, lo) => hi - lo)
+        coalesce(round(array_min(gaps), 4), lit(d)).as(s"${c}_res") }: _*)
   }
 
   /** Folds (axis, res) rows into one `<axis>_res` column per axis: the
@@ -459,44 +463,16 @@ object Climate {
           col("ts"), col("lat_res") / 2, col("lon_res") / 2).as("feature"))
   }
 
-  /** PER-(year,month) multi-axis resolution inference — the humidity
-    * and temperature pipelines' split-then-infer order: each monthly
-    * file infers its own grid resolution from ITS distinct coordinates
-    * (humidity_pipeline.py:136-139, temperature_pipeline.py:102-105),
-    * unlike the global inference of the precipitation pipeline
-    * ([[axisResolutions]] in [[compositeFrame]]), which infers one
-    * resolution over the whole year.
-    *
-    * Scale posture: the window input is the DISTINCT
-    * (year, month, axis, value) set, whose per-month cardinality is the
-    * grid's axis size — a property of the measurement grid, independent
-    * of row volume — so the (year,month,axis)-partitioned ordered window
-    * is bounded. One pass over the input covers all axes (unpivot). */
-  private[graft] def monthlyResolutions(df: DataFrame,
-      axes: Seq[(String, Double)]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val pairs = axes.map { case (c, _) =>
-      struct(lit(c).as("axis"), col(c).cast("double").as("v")) }
-    val dist = df.select(col("year"), col("month"), explode(array(pairs: _*)).as("p"))
-      .select(col("year"), col("month"), col("p.axis").as("axis"), col("p.v").as("v"))
-      .filter(col("v").isNotNull).distinct()
-    val w = Window.partitionBy(col("year"), col("month"), col("axis")).orderBy(col("v"))
-    val perAxis = dist
-      .withColumn("gap", col("v") - lag(col("v"), 1).over(w))
-      .groupBy(col("year"), col("month"), col("axis"))
-      .agg(round(min(col("gap")), 4).as("res"))
-    val res = resolutionColumns(axes)
-    perAxis.groupBy(col("year"), col("month")).agg(res.head, res.tail: _*)
-  }
-
   /** Shared prefix of the humidity/temperature composites: scan ->
     * reference-default time window (2022-01..2025-05,
     * humidity_pipeline.py:28-31) -> NaN drop -> land mask -> per-month
-    * resolution attach (broadcast: one row per month). */
+    * resolution attach ([[axisResolutions]] by (year, month), broadcast:
+    * one row per month). */
   private[graft] def monthlyMasked(s: SparkSession, dir: String): DataFrame = {
     val masked = withYearMonth(maskedGrid(s, dir, 2022, 1, 2025, 5), "ts")
     masked.join(
-      broadcast(monthlyResolutions(masked, Seq("lat" -> 0.5, "lon" -> 0.625))),
+      broadcast(axisResolutions(masked, Seq("lat" -> 0.5, "lon" -> 0.625),
+        Seq("year", "month"))),
       Seq("year", "month"))
   }
 
@@ -788,6 +764,81 @@ object Climate {
       .orderBy(col("series"))
   }
 
+  /** Origin of the time-series statistics' integer day index. The
+    * oracle twins spell the same date as `DATE '2024-01-01'`. */
+  private[graft] val DayOrigin = "2024-01-01"
+
+  /** Whole days from [[DayOrigin]] to `ts` (an INT; callers cast). */
+  private def dayIndex(ts: Column): Column =
+    datediff(to_date(ts), to_date(lit(DayOrigin)))
+
+  /** The (series, day) grouping keys of every daily series. */
+  private def seriesDay: Seq[Column] =
+    Seq(col("event_type").as("series"), dayIndex(col("ts")).cast("long").as("day"))
+
+  /** The daily reduction under every time-series statistic: one row
+    * per (series, day) with `y` the day's mean of the non-NULL values.
+    * The sum runs over values quantized to the 1e-9 grid as LONGS, so
+    * the mean is order-free and bit-identical under any partitioning
+    * and on both engines. Calendar-bounded: one row per observed day
+    * per series, whatever the row count. */
+  private def dailyMeans(events: DataFrame): DataFrame =
+    events.filter(col("value").isNotNull)
+      .groupBy(seriesDay: _*)
+      .agg((sum(floor(col("value") * lit(1e9) + lit(0.5)).cast("long"))
+        .cast("double") / lit(1e9) / count(lit(1)).cast("double")).as("y"))
+
+  /** Series A's and B's daily means paired by day: (day, x, yy), only
+    * the days both series observed. */
+  private def pairedDaily(events: DataFrame, typeA: String, typeB: String): DataFrame = {
+    val daily = dailyMeans(events.filter(col("event_type").isin(typeA, typeB)))
+    daily.filter(col("series") === typeA).select(col("day"), col("y").as("x"))
+      .join(daily.filter(col("series") === typeB)
+        .select(col("day").as("day_b"), col("y").as("yy")),
+        col("day") === col("day_b"))
+      .select(col("day"), col("x"), col("yy"))
+  }
+
+  /** Pearson r of `ya` against `yb` per `keys` group of lagged pairs:
+    * the group's pair count as `n`, r as `r`. Every moment sums a
+    * per-row integer-quantized term (Σx, Σy on the 1e-9 grid, the
+    * products on 1e-6 AFTER multiplication — products of quantized
+    * values would overflow BIGINT), so each r is an order-free fixed
+    * chain. A group where either side is constant reads NULL. */
+  private def laggedPearson(lagged: DataFrame, keys: Seq[String],
+      n: String, r: String): DataFrame = {
+    def qsum(c: Column, grid: Double): Column =
+      sum(floor(c * lit(grid) + lit(0.5)).cast("long")).cast("double") / lit(grid)
+    val agg = lagged.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as(n),
+        qsum(col("ya"), 1e9).as("sx"), qsum(col("yb"), 1e9).as("sy"),
+        qsum(col("ya") * col("ya"), 1e6).as("sxx"),
+        qsum(col("yb") * col("yb"), 1e6).as("syy"),
+        qsum(col("ya") * col("yb"), 1e6).as("sxy"))
+    val nD = col(n).cast("double")
+    val varA = nD * col("sxx") - col("sx") * col("sx")
+    val varB = nD * col("syy") - col("sy") * col("sy")
+    val num = nD * col("sxy") - col("sx") * col("sy")
+    agg.select(keys.map(col) :+ col(n) :+
+      halfUp(when(varA <= 0.0 || varB <= 0.0, lit(null).cast("double"))
+        .otherwise(num / sqrt(varA * varB)), 6).as(r): _*)
+  }
+
+  /** Most elements a packed per-key day array may hold: 100 years of
+    * days. The folds over such arrays are bounded by the calendar
+    * span, never the row count; a wider array is almost certainly bad
+    * timestamps, and a memory hazard. */
+  private[graft] val MaxSpanDays = 36600
+
+  /** The span pre-flight: `pts` unchanged, or an in-plan `raise_error`
+    * (no extra job) naming `what` when the array is longer than
+    * [[MaxSpanDays]]. */
+  private[operators] def spanGuarded(pts: Column, what: Column): Column =
+    when(size(pts) > MaxSpanDays, raise_error(concat(what, lit(" has "),
+      size(pts).cast("string"), lit(s" days > $MaxSpanDays, the span bound — " +
+        "an array this wide is almost certainly bad timestamps; fix the input"))))
+      .otherwise(pts)
+
   /** Per-cell linear TREND of the observed value over time — the
     * per-gridpoint OLS slope map every climate assessment publishes
     * (xarray `polyfit(dim='time', deg=1)` over a cube; cf. the
@@ -807,10 +858,10 @@ object Climate {
     * carry six doubles per cell (n, Σx, Σy, Σxx, Σxy via the moment
     * aggregates), never rows; the 100 TB cube reduces to a
     * cells-sized result with a single narrow exchange. */
-  def cellTrend(events: DataFrame, x0: String = "2024-01-01"): DataFrame = {
+  def cellTrend(events: DataFrame): DataFrame = {
     val g = syntheticGrid(events).filter(col("value").isNotNull)
       .select(col("lat"), col("lon"),
-        datediff(to_date(col("ts")), to_date(lit(x0))).cast("double").as("x"),
+        dayIndex(col("ts")).cast("double").as("x"),
         col("value").as("y"))
     val slope = when(col("vx") === 0.0, lit(null).cast("double"))
       .otherwise(col("cxy") / col("vx"))
@@ -849,10 +900,10 @@ object Climate {
     * Scale posture: ONE hash aggregate with map-side partials
     * collapses the facts to ten longs per series; everything after is
     * per-row scalar algebra on a series-sized table. */
-  def ols2(events: DataFrame, x0: String = "2024-01-01"): DataFrame = {
+  def ols2(events: DataFrame): DataFrame = {
     val g = events.filter(col("value").isNotNull)
       .select(col("event_type").as("series"),
-        datediff(to_date(col("ts")), to_date(lit(x0))).cast("long").as("x1"),
+        dayIndex(col("ts")).cast("long").as("x1"),
         // 2·lat: the synthetic grid's lat is (event_id%360)·0.5 − 90,
         // so twice it is the exact integer (event_id%360) − 180
         (pmod(col("event_id"), lit(360L)) - 180L).as("x2"),
@@ -908,13 +959,9 @@ object Climate {
     * row count (100 TB of events over 2 years is still ≤ ~270k pairs
     * per series). The daily table broadcasts to the self-join; the
     * rank window shuffles only (series, slope) pairs. */
-  def theilSenTrend(events: DataFrame, x0: String = "2024-01-01"): DataFrame = {
+  def theilSenTrend(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val daily = events.filter(col("value").isNotNull)
-      .groupBy(col("event_type").as("series"),
-        datediff(to_date(col("ts")), to_date(lit(x0))).cast("long").as("day"))
-      .agg((sum(floor(col("value") * lit(1e9) + lit(0.5)).cast("long"))
-        .cast("double") / lit(1e9) / count(lit(1)).cast("double")).as("y"))
+    val daily = dailyMeans(events)
     val days = daily.groupBy(col("series")).agg(count(lit(1)).as("n_days"))
     val slopes = daily.select(col("series"), col("day").as("d1"), col("y").as("y1"))
       .join(broadcast(daily.select(col("series"), col("day").as("d2"),
@@ -936,27 +983,6 @@ object Climate {
       .orderBy(col("series"))
   }
 
-  /** HOLT double-exponential smoothing per series (Holt 1957): level
-    * + trend recurrence over the daily-reduced series, with the
-    * one-step-ahead forecast l+b — the first forecasting primitive
-    * next to the trend probes ([[cellTrend]] fits one global line;
-    * Holt tracks a DRIFTING level, which is what operational series
-    * do). Recurrence (t = 2…n, init l₁ = y₁, b₁ = y₂ − y₁):
-    * lₜ = α·yₜ + (1−α)·(lₜ₋₁ + bₜ₋₁); bₜ = β·(lₜ − lₜ₋₁) + (1−β)·bₜ₋₁.
-    * α, β default to EXACT-BINARY 0.5/0.25 so (1−α), (1−β) are exact
-    * on every engine — the smoothing chain is a fixed-order double
-    * fold the oracle replays verbatim as a recursive CTE.
-    *
-    * Scale posture: the recurrence is inherently sequential IN TIME
-    * but the series are independent — facts reduce to (series, day)
-    * in one hash aggregate (integer-quantized order-free means), and
-    * the fold runs over a per-series collected day array, bounded by
-    * the CALENDAR SPAN, never the row count (100 TB over 2 years is
-    * still ≤ ~730 elements per series) — the humidity-composite
-    * bounded-collect posture, with a span pre-flight that fails
-    * loudly (in-plan raise_error, zero extra jobs) on a series wide
-    * enough to make the array a memory hazard. Series with fewer
-    * than 2 days carry no trend information and are dropped. */
   /** WEEKLY SEASONALITY strength per series: η² = SS_between/SS_total
     * over day-of-week groups of the daily-reduced series — "how much
     * of this series' daily variance is the weekly cycle?" (η² ≈ 1:
@@ -980,12 +1006,8 @@ object Climate {
     * never the facts); totals, dow groups, and both SS aggregates are
     * re-aggregations of that calendar-bounded table, with the
     * series-sized totals broadcast back. */
-  def weeklySeasonality(events: DataFrame, x0: String = "2024-01-01"): DataFrame = {
-    val daily = events.filter(col("value").isNotNull)
-      .groupBy(col("event_type").as("series"),
-        datediff(to_date(col("ts")), to_date(lit(x0))).cast("long").as("day"))
-      .agg((sum(floor(col("value") * lit(1e9) + lit(0.5)).cast("long"))
-        .cast("double") / lit(1e9) / count(lit(1)).cast("double")).as("y"))
+  def weeklySeasonality(events: DataFrame): DataFrame = {
+    val daily = dailyMeans(events)
       .withColumn("qy", floor(col("y") * lit(1e9) + lit(0.5)).cast("long"))
       .withColumn("dow", pmod(col("day"), lit(7L)))
       .localCheckpoint()
@@ -1026,26 +1048,35 @@ object Climate {
   val HoltAlpha = 0.5
   val HoltBeta = 0.25
 
-  def holtTrend(events: DataFrame, alpha: Double = 0.5, beta: Double = 0.25,
-      x0: String = "2024-01-01", maxDays: Int = 36600): DataFrame = {
-    require(alpha > 0 && alpha < 1 && beta > 0 && beta < 1,
-      s"need 0<alpha<1, 0<beta<1: $alpha, $beta")
-    val daily = events.filter(col("value").isNotNull)
-      .groupBy(col("event_type").as("series"),
-        datediff(to_date(col("ts")), to_date(lit(x0))).cast("long").as("day"))
-      .agg((sum(floor(col("value") * lit(1e9) + lit(0.5)).cast("long"))
-        .cast("double") / lit(1e9) / count(lit(1)).cast("double")).as("y"))
-    val packed = daily.groupBy(col("series"))
+  /** HOLT double-exponential smoothing per series (Holt 1957): level
+    * + trend recurrence over the daily-reduced series, with the
+    * one-step-ahead forecast l+b — the first forecasting primitive
+    * next to the trend probes ([[cellTrend]] fits one global line;
+    * Holt tracks a DRIFTING level, which is what operational series
+    * do). Recurrence (t = 2…n, init l₁ = y₁, b₁ = y₂ − y₁):
+    * lₜ = α·yₜ + (1−α)·(lₜ₋₁ + bₜ₋₁); bₜ = β·(lₜ − lₜ₋₁) + (1−β)·bₜ₋₁.
+    * α, β are the EXACT-BINARY [[HoltAlpha]]/[[HoltBeta]], so (1−α),
+    * (1−β) are exact on every engine — the smoothing chain is a
+    * fixed-order double fold the oracle replays verbatim as a
+    * recursive CTE.
+    *
+    * Scale posture: the recurrence is inherently sequential IN TIME
+    * but the series are independent — facts reduce to (series, day)
+    * in one hash aggregate (integer-quantized order-free means), and
+    * the fold runs over a per-series collected day array, bounded by
+    * the CALENDAR SPAN, never the row count (100 TB over 2 years is
+    * still ≤ ~730 elements per series) — the humidity-composite
+    * bounded-collect posture, with a span pre-flight that fails
+    * loudly (in-plan raise_error, zero extra jobs) on a series wide
+    * enough to make the array a memory hazard. Series with fewer
+    * than 2 days carry no trend information and are dropped. */
+  def holtTrend(events: DataFrame): DataFrame = {
+    val (alpha, beta) = (HoltAlpha, HoltBeta)
+    val packed = dailyMeans(events).groupBy(col("series"))
       .agg(sort_array(collect_list(struct(col("day"), col("y")))).as("pts"))
       .filter(size(col("pts")) >= 2)
-      .withColumn("pts",
-        when(size(col("pts")) > maxDays, raise_error(concat(
-          lit("holtTrend: series "), col("series").cast("string"),
-          lit(" has "), size(col("pts")).cast("string"),
-          lit(s" days > maxDays=$maxDays — an array this wide is " +
-            "almost certainly bad timestamps; fix the input or raise " +
-            "maxDays explicitly"))))
-          .otherwise(col("pts")))
+      .withColumn("pts", spanGuarded(col("pts"),
+        concat(lit("holtTrend: series "), col("series").cast("string"))))
     val vs = transform(col("pts"), p => p("y"))
     val zero = struct(element_at(vs, 1).as("l"),
       (element_at(vs, 2) - element_at(vs, 1)).as("b"))
@@ -1090,30 +1121,14 @@ object Climate {
     *
     * Scale posture: identical to holtTrend — one exact-quantized
     * (series, day) reduction, bounded collect per series with the
-    * same maxDays pre-flight, k tiny one-row folds. */
-  def holtWinters(events: DataFrame, alpha: Double = HwAlpha,
-      beta: Double = HwBeta, gamma: Double = HwGamma,
-      season: Int = HwSeason, x0: String = "2024-01-01",
-      maxDays: Int = 36600): DataFrame = {
-    require(alpha > 0 && alpha < 1 && beta > 0 && beta < 1 &&
-      gamma > 0 && gamma < 1, s"need (0,1) constants: $alpha $beta $gamma")
-    require(season >= 2, s"need season >= 2: $season")
-    val m = season
-    val daily = events.filter(col("value").isNotNull)
-      .groupBy(col("event_type").as("series"),
-        datediff(to_date(col("ts")), to_date(lit(x0))).cast("long").as("day"))
-      .agg((sum(floor(col("value") * lit(1e9) + lit(0.5)).cast("long"))
-        .cast("double") / lit(1e9) / count(lit(1)).cast("double")).as("y"))
-    val packed = daily.groupBy(col("series"))
+    * same span pre-flight, k tiny one-row folds. */
+  def holtWinters(events: DataFrame): DataFrame = {
+    val (alpha, beta, gamma, m) = (HwAlpha, HwBeta, HwGamma, HwSeason)
+    val packed = dailyMeans(events).groupBy(col("series"))
       .agg(sort_array(collect_list(struct(col("day"), col("y")))).as("pts"))
       .filter(size(col("pts")) >= 2 * m + 1)
-      .withColumn("pts",
-        when(size(col("pts")) > maxDays, raise_error(concat(
-          lit("holtWinters: series "), col("series").cast("string"),
-          lit(" has "), size(col("pts")).cast("string"),
-          lit(s" days > maxDays=$maxDays — fix the input or raise " +
-            "maxDays explicitly"))))
-          .otherwise(col("pts")))
+      .withColumn("pts", spanGuarded(col("pts"),
+        concat(lit("holtWinters: series "), col("series").cast("string"))))
     val vs = transform(col("pts"), p => p("y"))
     val seqSum = (arr: Column) => aggregate(arr, lit(0.0), (acc, x) => acc + x)
     val l0 = seqSum(slice(vs, 1, m)) / lit(m.toDouble)
@@ -1145,12 +1160,11 @@ object Climate {
     * one day-rank at a time with the rotating seasonal LIST as CTE
     * state — same init (list_sum = the sequential fold), same fixed
     * operand order, constants emitted from the same Scala vals. */
-  private[graft] def holtWintersOracleSql(alpha: Double, beta: Double,
-      gamma: Double, season: Int): String = {
-    val (a, a1) = (alpha.toString, (1 - alpha).toString)
-    val (b, b1) = (beta.toString, (1 - beta).toString)
-    val (g, g1) = (gamma.toString, (1 - gamma).toString)
-    val m = season
+  private def holtWintersOracleSql: String = {
+    val (a, a1) = (HwAlpha.toString, (1 - HwAlpha).toString)
+    val (b, b1) = (HwBeta.toString, (1 - HwBeta).toString)
+    val (g, g1) = (HwGamma.toString, (1 - HwGamma).toString)
+    val m = HwSeason
     s"""WITH RECURSIVE daily AS (
        |  SELECT event_type AS series,
        |         CAST(date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS BIGINT) AS day,
@@ -1211,16 +1225,9 @@ object Climate {
     * Scale posture: one (series, day) reduction; ONE series-key
     * window shuffle for the centered frame (calendar-bounded rows);
     * the dow means are a counts-only hash aggregate broadcast back. */
-  def seasonalDecompose(events: DataFrame,
-      x0: String = "2024-01-01"): DataFrame = {
+  def seasonalDecompose(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val daily = events.filter(col("value").isNotNull)
-      .groupBy(col("event_type").as("series"),
-        datediff(to_date(col("ts")), to_date(lit(x0))).cast("long").as("day"))
-      .agg(sum(floor(col("value") * lit(1e9) + lit(0.5)).cast("long")).as("qs"),
-        count(lit(1)).as("cnt"))
-      .select(col("series"), col("day"),
-        (col("qs").cast("double") / lit(1e9) / col("cnt").cast("double")).as("y"))
+    val daily = dailyMeans(events)
     val w = Window.partitionBy(col("series")).orderBy(col("day"))
       .rowsBetween(-3, 3)
     val yq = floor(col("y") * lit(1e9) + lit(0.5)).cast("long")
@@ -1251,11 +1258,11 @@ object Climate {
     * a recursive CTE stepping one day-rank at a time — same init,
     * same fixed operand order, constants emitted from the SAME Scala
     * values (the bootstrap single-source-of-truth posture). */
-  private[graft] def holtOracleSql(alpha: Double, beta: Double): String = {
+  private def holtOracleSql: String = {
     // exact shortest-repr literals of the Scala doubles — DuckDB
     // parses them back to the identical bits
-    val (a, a1, b, b1) = (alpha.toString, (1 - alpha).toString,
-      beta.toString, (1 - beta).toString)
+    val (a, a1, b, b1) = (HoltAlpha.toString, (1 - HoltAlpha).toString,
+      HoltBeta.toString, (1 - HoltBeta).toString)
     s"""WITH RECURSIVE daily AS (
        |  SELECT event_type AS series,
        |         CAST(date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS BIGINT) AS day,
@@ -1300,39 +1307,18 @@ object Climate {
     * never row-count-bounded) joined on the shifted day; one hash
     * aggregate per lag carries five longs. */
   def crossCorrelation(events: DataFrame, typeA: String, typeB: String,
-      maxLag: Int = 7, x0: String = "2024-01-01"): DataFrame = {
+      maxLag: Int = 7): DataFrame = {
     require(maxLag >= 1, s"need maxLag >= 1: $maxLag")
-    val daily = events.filter(col("value").isNotNull &&
-        col("event_type").isin(typeA, typeB))
-      .groupBy(col("event_type"),
-        datediff(to_date(col("ts")), to_date(lit(x0))).cast("long").as("day"))
-      .agg((sum(floor(col("value") * lit(1e9) + lit(0.5)).cast("long"))
-        .cast("double") / lit(1e9) / count(lit(1)).cast("double")).as("y"))
-    val a = daily.filter(col("event_type") === typeA)
+    val daily = dailyMeans(events.filter(col("event_type").isin(typeA, typeB)))
+    val a = daily.filter(col("series") === typeA)
       .select(col("day"), col("y").as("ya"))
-    val b = daily.filter(col("event_type") === typeB)
+    val b = daily.filter(col("series") === typeB)
       .select(col("day").as("day_b"), col("y").as("yb"))
     val lagged = a.crossJoin(broadcast(
         events.sparkSession.range(-maxLag.toLong, maxLag + 1L)
           .select(col("id").as("lag"))))
       .join(b, col("day") + col("lag") === col("day_b"))
-    val q6 = (c: org.apache.spark.sql.Column) =>
-      sum(floor(c * lit(1e6) + lit(0.5)).cast("long")).cast("double") / lit(1e6)
-    val q9 = (c: org.apache.spark.sql.Column) =>
-      sum(floor(c * lit(1e9) + lit(0.5)).cast("long")).cast("double") / lit(1e9)
-    val agg = lagged.groupBy(col("lag"))
-      .agg(count(lit(1)).as("n_days"),
-        q9(col("ya")).as("sx"), q9(col("yb")).as("sy"),
-        q6(col("ya") * col("ya")).as("sxx"),
-        q6(col("yb") * col("yb")).as("syy"),
-        q6(col("ya") * col("yb")).as("sxy"))
-    val nD = col("n_days").cast("double")
-    val varA = nD * col("sxx") - col("sx") * col("sx")
-    val varB = nD * col("syy") - col("sy") * col("sy")
-    val num = nD * col("sxy") - col("sx") * col("sy")
-    agg.select(col("lag"), col("n_days"),
-        halfUp(when(varA <= 0.0 || varB <= 0.0, lit(null).cast("double"))
-          .otherwise(num / sqrt(varA * varB)), 6).as("ccf"))
+    laggedPearson(lagged, Seq("lag"), "n_days", "ccf")
       .orderBy(col("lag"))
   }
 
@@ -1351,40 +1337,22 @@ object Climate {
     * facts); the lag expansion is maxLag copies of the calendar-
     * bounded daily table joined on the shifted day; one hash aggregate
     * per (series, lag) carries five longs. */
-  def autocorrelation(events: DataFrame, maxLag: Int = 7,
-      x0: String = "2024-01-01"): DataFrame = {
+  def autocorrelation(events: DataFrame, maxLag: Int = 7): DataFrame =
+    acf(events, maxLag)._2.orderBy(col("series"), col("lag"))
+
+  /** The pinned daily table and [[autocorrelation]]'s unordered
+    * per-(series, lag) readout over it. */
+  private def acf(events: DataFrame, maxLag: Int): (DataFrame, DataFrame) = {
     require(maxLag >= 1, s"need maxLag >= 1: $maxLag")
-    val daily = events.filter(col("value").isNotNull)
-      .groupBy(col("event_type").as("series"),
-        datediff(to_date(col("ts")), to_date(lit(x0))).cast("long").as("day"))
-      .agg((sum(floor(col("value") * lit(1e9) + lit(0.5)).cast("long"))
-        .cast("double") / lit(1e9) / count(lit(1)).cast("double")).as("y"))
-      .localCheckpoint()
+    val daily = dailyMeans(events).localCheckpoint()
     val a = daily.select(col("series"), col("day"), col("y").as("ya"))
     val b = daily.select(col("series").as("series_b"),
       col("day").as("day_b"), col("y").as("yb"))
     val lagged = a.crossJoin(broadcast(
-        events.sparkSession.range(1L, maxLag + 1L).select(col("id").as("lag"))))
+        daily.sparkSession.range(1L, maxLag + 1L).select(col("id").as("lag"))))
       .join(b, col("series") === col("series_b") &&
         col("day") + col("lag") === col("day_b"))
-    val q6 = (c: org.apache.spark.sql.Column) =>
-      sum(floor(c * lit(1e6) + lit(0.5)).cast("long")).cast("double") / lit(1e6)
-    val q9 = (c: org.apache.spark.sql.Column) =>
-      sum(floor(c * lit(1e9) + lit(0.5)).cast("long")).cast("double") / lit(1e9)
-    val agg = lagged.groupBy(col("series"), col("lag"))
-      .agg(count(lit(1)).as("n_pairs"),
-        q9(col("ya")).as("sx"), q9(col("yb")).as("sy"),
-        q6(col("ya") * col("ya")).as("sxx"),
-        q6(col("yb") * col("yb")).as("syy"),
-        q6(col("ya") * col("yb")).as("sxy"))
-    val nD = col("n_pairs").cast("double")
-    val varA = nD * col("sxx") - col("sx") * col("sx")
-    val varB = nD * col("syy") - col("sy") * col("sy")
-    val num = nD * col("sxy") - col("sx") * col("sy")
-    agg.select(col("series"), col("lag"), col("n_pairs"),
-        halfUp(when(varA <= 0.0 || varB <= 0.0, lit(null).cast("double"))
-          .otherwise(num / sqrt(varA * varB)), 6).as("acf"))
-      .orderBy(col("series"), col("lag"))
+    (daily, laggedPearson(lagged, Seq("series", "lag"), "n_pairs", "acf"))
   }
 
   /** M4 DOWNSAMPLE per (series, day): first/last/min/max of each
@@ -1432,18 +1400,16 @@ object Climate {
     *
     * Parity: each r²ₖ/(n−k) term quantizes to the 1e-12 grid as a
     * LONG before the sum (order-free); the n(n+2)·Σ chain is fixed
-    * order. Scale: the ACF reduction does the heavy lifting; this
-    * adds one series-sized join + hash aggregate. */
-  def ljungBox(events: DataFrame, maxLag: Int = 7,
-      x0: String = "2024-01-01"): DataFrame = {
-    val acf = autocorrelation(events, maxLag, x0)
-    val days = events.filter(col("value").isNotNull)
-      .groupBy(col("event_type").as("series"))
-      .agg(countDistinct(
-        datediff(to_date(col("ts")), to_date(lit(x0)))).as("n_days"))
+    * order. Scale: the ACF reduction does the heavy lifting; `n_days`
+    * counts the rows of the same pinned daily table (no second scan of
+    * the facts), and the readout adds one series-sized join + hash
+    * aggregate. */
+  def ljungBox(events: DataFrame, maxLag: Int = 7): DataFrame = {
+    val (daily, r) = acf(events, maxLag)
+    val days = daily.groupBy(col("series")).agg(count(lit(1)).as("n_days"))
     val nD = col("n_days").cast("double")
     val term = (col("acf") * col("acf")) / (nD - col("lag").cast("double"))
-    acf.filter(col("acf").isNotNull)
+    r.filter(col("acf").isNotNull)
       .join(broadcast(days), "series")
       .groupBy(col("series"))
       .agg(max(col("n_days")).as("n_days"), count(lit(1)).as("n_lags"),
@@ -1473,20 +1439,8 @@ object Climate {
     * argument: 100 TB over 2 years is still ≤ ~270k pairs), broadcast
     * to a nested-loop self-join; the facts reduce in one hash
     * aggregate. */
-  def kendallTau(events: DataFrame, typeA: String, typeB: String,
-      x0: String = "2024-01-01"): DataFrame = {
-    val daily = events.filter(col("value").isNotNull &&
-        col("event_type").isin(typeA, typeB))
-      .groupBy(col("event_type"),
-        datediff(to_date(col("ts")), to_date(lit(x0))).cast("long").as("day"))
-      .agg((sum(floor(col("value") * lit(1e9) + lit(0.5)).cast("long"))
-        .cast("double") / lit(1e9) / count(lit(1)).cast("double")).as("y"))
-    val paired = daily.filter(col("event_type") === typeA)
-      .select(col("day"), col("y").as("x"))
-      .join(daily.filter(col("event_type") === typeB)
-        .select(col("day").as("day_b"), col("y").as("yy")),
-        col("day") === col("day_b"))
-      .select(col("day"), col("x"), col("yy"))
+  def kendallTau(events: DataFrame, typeA: String, typeB: String): DataFrame = {
+    val paired = pairedDaily(events, typeA, typeB)
     val nDays = paired.agg(count(lit(1)).as("n_days"))
     val prod = (col("x1") - col("x2")) * (col("y1") - col("y2"))
     val cnts = paired.select(col("day").as("d1"), col("x").as("x1"),
@@ -1548,20 +1502,8 @@ object Climate {
       .select(col(v), (lit(2L) * col("_cum") - col("_c") + lit(1L)).as(out))
   }
 
-  def spearmanRho(events: DataFrame, typeA: String, typeB: String,
-      x0: String = "2024-01-01"): DataFrame = {
-    val daily = events.filter(col("value").isNotNull &&
-        col("event_type").isin(typeA, typeB))
-      .groupBy(col("event_type"),
-        datediff(to_date(col("ts")), to_date(lit(x0))).cast("long").as("day"))
-      .agg((sum(floor(col("value") * lit(1e9) + lit(0.5)).cast("long"))
-        .cast("double") / lit(1e9) / count(lit(1)).cast("double")).as("y"))
-    val paired = daily.filter(col("event_type") === typeA)
-      .select(col("day"), col("y").as("x"))
-      .join(daily.filter(col("event_type") === typeB)
-        .select(col("day").as("day_b"), col("y").as("yy")),
-        col("day") === col("day_b"))
-      .select(col("day"), col("x"), col("yy"))
+  def spearmanRho(events: DataFrame, typeA: String, typeB: String): DataFrame = {
+    val paired = pairedDaily(events, typeA, typeB)
       // pinned once (r17, guide §1.2): the main moment chain and BOTH
       // broadcast rank builds consumed this un-pinned day-pair join —
       // the events scan + daily aggregate + self-join executed three
@@ -1607,19 +1549,9 @@ object Climate {
     * fixed-order doubles. Scale: ranks via the distinct-value global
     * prefix sum ([[doubledRanks]] — no partition-less window); one
     * counts-only tie aggregate. */
-  def wilcoxonSignedRank(events: DataFrame, typeA: String, typeB: String,
-      x0: String = "2024-01-01"): DataFrame = {
-    val daily = events.filter(col("value").isNotNull &&
-        col("event_type").isin(typeA, typeB))
-      .groupBy(col("event_type"),
-        datediff(to_date(col("ts")), to_date(lit(x0))).cast("long").as("day"))
-      .agg((sum(floor(col("value") * lit(1e9) + lit(0.5)).cast("long"))
-        .cast("double") / lit(1e9) / count(lit(1)).cast("double")).as("y"))
-    val diffs = daily.filter(col("event_type") === typeA)
-      .select(col("day"), col("y").as("x"))
-      .join(daily.filter(col("event_type") === typeB)
-        .select(col("day").as("day_b"), col("y").as("yy")),
-        col("day") === col("day_b"))
+  def wilcoxonSignedRank(events: DataFrame, typeA: String, typeB: String):
+      DataFrame = {
+    val diffs = pairedDaily(events, typeA, typeB)
       .select((col("x") - col("yy")).as("d"))
       .filter(col("d") =!= 0.0)
       .withColumn("ad", abs(col("d")))
@@ -1664,9 +1596,9 @@ object Climate {
     * i.e. |daily mean| < ~1.1×10⁵ on the 1e-4 grid — NOT 10⁷; Spark
     * wraps long sums silently under non-ANSI while DuckDB widens to
     * HUGEINT, so exceeding it is both wrong and cross-engine
-    * divergent). An in-plan raise_error pre-flight (the holtWinters
-    * maxDays posture — zero extra jobs) rejects any paired day past
-    * the bound instead of silently wrapping.
+    * divergent). An in-plan raise_error pre-flight (the
+    * [[spanGuarded]] posture — zero extra jobs) rejects any paired day
+    * past the bound instead of silently wrapping.
     *
     * Scale posture: facts reduce once; the rolling frame runs over
     * the calendar-bounded paired daily table, single partition BY
@@ -1678,26 +1610,15 @@ object Climate {
     * hashes every row to one partition (same execution) while keeping
     * the spec's boundedness contract visible in the plan. */
   def rollingCorrelation(events: DataFrame, typeA: String, typeB: String,
-      window: Int = 7, x0: String = "2024-01-01"): DataFrame = {
+      window: Int = 7): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(window >= 2, s"need window >= 2: $window")
-    val daily = events.filter(col("value").isNotNull &&
-        col("event_type").isin(typeA, typeB))
-      .groupBy(col("event_type"),
-        datediff(to_date(col("ts")), to_date(lit(x0))).cast("long").as("day"))
-      .agg((sum(floor(col("value") * lit(1e9) + lit(0.5)).cast("long"))
-        .cast("double") / lit(1e9) / count(lit(1)).cast("double")).as("y"))
-    val paired = daily.filter(col("event_type") === typeA)
-      .select(col("day"), floor(col("y") * lit(1e4) + lit(0.5))
-        .cast("long").as("xq"))
-      .join(daily.filter(col("event_type") === typeB)
-        .select(col("day").as("day_b"), floor(col("y") * lit(1e4) + lit(0.5))
-          .cast("long").as("yq")),
-        col("day") === col("day_b"))
-      .select(col("day"), col("xq"), col("yq"))
+    val paired = pairedDaily(events, typeA, typeB).select(col("day"),
+      floor(col("x") * lit(1e4) + lit(0.5)).cast("long").as("xq"),
+      floor(col("yy") * lit(1e4) + lit(0.5)).cast("long").as("yq"))
     // Pre-flight overflow guard (see scaladoc): a frame's long Σxy is
     // safe iff every |quantized mean| ≤ ⌊√(2⁶³/window)⌋. In-plan
-    // raise_error, zero extra jobs, mirroring holtWinters' maxDays.
+    // raise_error, zero extra jobs, as in spanGuarded.
     // the √ bound alone is off by one when 2⁶³/window is a perfect
     // square (window = 2, 8, 32, …): qmax²·window == 2⁶³ > MaxValue,
     // so a frame of values exactly at ±qmax would wrap — tighten by
@@ -1756,13 +1677,9 @@ object Climate {
     * and run breaks are per-series lag windows over the calendar-
     * bounded daily table (partitioned by series — never a global
     * window); the readout is one counts-only hash aggregate. */
-  def runsTest(events: DataFrame, x0: String = "2024-01-01"): DataFrame = {
+  def runsTest(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val daily = events.filter(col("value").isNotNull)
-      .groupBy(col("event_type").as("series"),
-        datediff(to_date(col("ts")), to_date(lit(x0))).cast("long").as("day"))
-      .agg((sum(floor(col("value") * lit(1e9) + lit(0.5)).cast("long"))
-        .cast("double") / lit(1e9) / count(lit(1)).cast("double")).as("y"))
+    val daily = dailyMeans(events)
     val w = Window.partitionBy(col("series")).orderBy(col("day"))
     val moves = daily
       .withColumn("prev", lag(col("y"), 1).over(w))
@@ -1813,13 +1730,9 @@ object Climate {
     * Scale posture: facts collapse to (series, day) in one map-side-
     * partial aggregate; the mean is a series-sized broadcast join
     * back; one series-key window shuffle carries a long. */
-  def changePoint(events: DataFrame, x0: String = "2024-01-01"): DataFrame = {
+  def changePoint(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val daily = events.filter(col("value").isNotNull)
-      .groupBy(col("event_type").as("series"),
-        datediff(to_date(col("ts")), to_date(lit(x0))).cast("long").as("day"))
-      .agg((sum(floor(col("value") * lit(1e9) + lit(0.5)).cast("long"))
-        .cast("double") / lit(1e9) / count(lit(1)).cast("double")).as("y"))
+    val daily = dailyMeans(events)
     val means = daily.groupBy(col("series"))
       .agg((sum(floor(col("y") * lit(1e6) + lit(0.5)).cast("long"))
         .cast("double") / lit(1e6) / count(lit(1)).cast("double")).as("mu"),
@@ -1860,11 +1773,8 @@ object Climate {
     * Scale posture: one map-side-partial (series, day) count
     * aggregate; λ rides a series-sized broadcast join back. No
     * window, no second shuffle. */
-  def poissonDays(events: DataFrame, x0: String = "2024-01-01"): DataFrame = {
-    val daily = events
-      .groupBy(col("event_type").as("series"),
-        datediff(to_date(col("ts")), to_date(lit(x0))).cast("long").as("day"))
-      .agg(count(lit(1)).as("n"))
+  def poissonDays(events: DataFrame): DataFrame = {
+    val daily = events.groupBy(seriesDay: _*).agg(count(lit(1)).as("n"))
     val lam = daily.groupBy(col("series"))
       .agg(sum(col("n")).as("tot"),
         (max(col("day")) - min(col("day")) + 1L).as("span"))
@@ -2339,10 +2249,9 @@ object Climate {
     "q_stats_seasonality" -> ((s, d) =>
       weeklySeasonality(Tables.events(s, d))),
     // Holt level+trend smoothing per event-type daily series — the
-    // constants are passed EXPLICITLY from the shared vals so the
-    // engine and the generated oracle can never drift
-    "q_stats_holt" -> ((s, d) =>
-      holtTrend(Tables.events(s, d), alpha = HoltAlpha, beta = HoltBeta)),
+    // engine and the generated oracle read the same HoltAlpha/HoltBeta
+    // vals, so they can never drift
+    "q_stats_holt" -> ((s, d) => holtTrend(Tables.events(s, d))),
     // grid cells inside the irregular ROI pentagon (even-odd rule)
     "q_geo_polygon" -> ((s, d) =>
       pointInPolygon(Tables.events(s, d))),
@@ -2856,11 +2765,10 @@ object Climate {
         |JOIN peak ON tot.series = peak.series
         |ORDER BY tot.series""".stripMargin,
     // generated recursive-CTE twin — see holtOracleSql
-    "q_stats_holt" -> holtOracleSql(HoltAlpha, HoltBeta),
+    "q_stats_holt" -> holtOracleSql,
     // generated recursive-CTE twin with the rotating seasonal LIST
     // as CTE state — see holtWintersOracleSql
-    "q_stats_holtwinters" ->
-      holtWintersOracleSql(HwAlpha, HwBeta, HwGamma, HwSeason),
+    "q_stats_holtwinters" -> holtWintersOracleSql,
     // same quantized daily means, same exact-long centered frame sum
     // (NULL at partial edges), same re-quantized detrended dow means,
     // same fixed render chains

@@ -271,7 +271,7 @@ object Inference {
     * Parity: d/n are exact counts; the per-day risk set is an exact
     * prefix subtraction; the cumulative product is a SEQUENTIAL fold
     * in event-day order — packed-array aggregate on the engine side
-    * (the holtTrend posture, with the same maxDays pre-flight),
+    * (the holtTrend posture, with the same span pre-flight),
     * recursive CTE stepping the same order in the oracle, so every
     * multiply pairs the identical IEEE doubles.
     *
@@ -327,7 +327,7 @@ object Inference {
       |              ELSE CAST(date_diff('day', u.v0, h.hd) AS BIGINT) END AS t
       |  FROM u LEFT JOIN c USING (user_id), h)""".stripMargin
 
-  def kaplanMeier(events: DataFrame, maxDays: Int = 36600): DataFrame = {
+  def kaplanMeier(events: DataFrame): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
     val spans = conversionSpans(events)
@@ -346,12 +346,8 @@ object Inference {
     val packed = risk.groupBy(col("arm"))
       .agg(sort_array(collect_list(struct(col("day"), col("d"), col("n"))))
         .as("pts"))
-      .withColumn("pts",
-        when(size(col("pts")) > maxDays, raise_error(concat(
-          lit("kaplanMeier: arm "), col("arm").cast("string"),
-          lit(" has "), size(col("pts")).cast("string"),
-          lit(s" event days > maxDays=$maxDays — fix the input or raise " +
-            "maxDays explicitly")))).otherwise(col("pts")))
+      .withColumn("pts", Climate.spanGuarded(col("pts"),
+        concat(lit("kaplanMeier: arm "), col("arm").cast("string"))))
     // sequential product-limit fold, emitting S after each event day
     val folded = packed.select(col("arm"), col("pts"), expr(
       """aggregate(pts,
@@ -548,9 +544,9 @@ object Inference {
     * Scale: facts reduce to (arm, user) → pooled (day) rows; the
     * risk-set walk is a sequential packed-array fold over the
     * calendar-bounded event-day list (the kaplanMeier posture with
-    * the same maxDays pre-flight — days, never users or events; no
+    * the same span pre-flight — days, never users or events; no
     * partition-less window anywhere). */
-  def logRank(events: DataFrame, maxDays: Int = 36600): DataFrame = {
+  def logRank(events: DataFrame): DataFrame = {
     val byDay = conversionSpans(events)
       .groupBy(col("t").as("day"))
       .agg(sum(col("ev")).as("d"),
@@ -561,18 +557,15 @@ object Inference {
       sum(col("closed1")).as("n1t"))
     // the risk-set walk is a SEQUENTIAL fold over the calendar-bounded
     // day list (the kaplanMeier packed-array posture, with the same
-    // maxDays pre-flight) — never a partition-less window: risk sets
+    // span pre-flight) — never a partition-less window: risk sets
     // by exact prefix subtraction, each event day's E/V term quantized
     // to the 1e-6 grid and added as exact BIGINTs
     val packed = byDay
       .agg(sort_array(collect_list(struct(col("day"), col("d"),
         col("d1"), col("closed"), col("closed1")))).as("pts"))
       .crossJoin(broadcast(tot))
-      .withColumn("pts",
-        when(size(col("pts")) > maxDays, raise_error(concat(
-          lit("logRank: "), size(col("pts")).cast("string"),
-          lit(s" event days > maxDays=$maxDays — fix the input or raise " +
-            "maxDays explicitly")))).otherwise(col("pts")))
+      .withColumn("pts", Climate.spanGuarded(col("pts"),
+        lit("logRank: the pooled event-day list")))
     val folded = packed.select(expr(
       """aggregate(pts,
         |  struct(CAST(0 AS BIGINT) AS gone, CAST(0 AS BIGINT) AS gone1,

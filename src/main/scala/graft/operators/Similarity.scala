@@ -903,6 +903,7 @@ object Similarity {
     // be static at plan-build; ragged rows fail loudly in-plan
     val dims = pts.select(size(col("v")).as("d")).head.getInt(0)
     require(dims >= 1, s"kmeansExact: empty embedding vectors")
+    requireModelLiterals("kmeansExact", k, dims)
     // DRIVER-HELD model state (r17 round 2, guide §1.2): the model is
     // a k×d array of doubles — O(model), never O(data) — collected to
     // the driver each Lloyd round and re-injected as a LITERAL
@@ -1027,6 +1028,7 @@ object Similarity {
     // (vec_id, vector, dist2-to-nearest-prior; None for the seed)
     var sel = Vector((pickedId(seed, "kCenterSelect", 1, k), seed.getSeq[Double](1),
       Option.empty[Double]))
+    requireModelLiterals("kCenterSelect", k, sel.head._2.size)
     for (t <- 2 to k) {
       val csLit = array(sel.map { case (_, cv, _) =>
         array(cv.map(lit(_)): _*) }: _*)
@@ -1057,6 +1059,19 @@ object Similarity {
         graft.halfUp(col("dist2"), 6).as("dist2"))
       .orderBy(col("rank"))
   }
+
+  /** Most model doubles (k vectors of d) that a driver-held selector
+    * re-injects into its plan as literals each round; the largest
+    * registered model is 8·64 = 512. */
+  private[graft] val MaxModelLiterals = 4096
+
+  /** Fails, naming `op` and the bound, when k·d exceeds
+    * [[MaxModelLiterals]]: a literal array that wide would bloat every
+    * round's plan and its analysis. */
+  private def requireModelLiterals(op: String, k: Int, d: Int): Unit =
+    require(k.toLong * d <= MaxModelLiterals,
+      s"$op: k·d = ${k}·${d} = ${k.toLong * d} model literals exceed the bound of " +
+        s"$MaxModelLiterals")
 
   /** The vec_id of a greedy argmax row (id, vector, …), or a failure
     * naming why there is none: an all-NULL row is the max over an
@@ -1167,6 +1182,7 @@ object Similarity {
     // (vec_id, v, rel, max_sim, score)
     var sel = Vector((first.getLong(0), first.getSeq[Double](1),
       first.getDouble(2), Option.empty[Double], first.getDouble(3)))
+    requireModelLiterals("mmrSelect", k, sel.head._2.size)
     for (t <- 2 to k) {
       val csLit = array(sel.map { case (_, cv, _, _, _) =>
         array(cv.map(lit(_)): _*) }: _*)

@@ -210,7 +210,7 @@ class ClimateSpec extends SparkTestBase {
       s"missing the partition-local prefix-sum window:\n$plan")
   }
 
-  test("monthlyResolutions: each month infers its OWN grid resolution") {
+  test("axisResolutions by (year, month): each month infers its OWN grid resolution") {
     // month 1 is a 0.5° grid, month 2 a 1.0° grid, month 3 has a single
     // point per axis (falls back to the default) — the split-then-infer
     // order of humidity_pipeline.py:136-139 / temperature_pipeline.py:102-105
@@ -219,7 +219,8 @@ class ClimateSpec extends SparkTestBase {
       (2024, 2, 0.0, 10.0), (2024, 2, 1.0, 11.25),
       (2024, 3, 4.0, 40.0),
     ).toDF("year", "month", "lat", "lon")
-    val res = Climate.monthlyResolutions(df, Seq("lat" -> 0.5, "lon" -> 0.625))
+    val res = Climate.axisResolutions(df, Seq("lat" -> 0.5, "lon" -> 0.625),
+        Seq("year", "month"))
       .orderBy(col("year"), col("month"))
       .collect().map(r => (r.getInt(1), r.getDouble(2), r.getDouble(3))).toSeq
     assert(res == Seq((1, 0.5, 0.625), (2, 1.0, 1.25), (3, 0.5, 0.625)))

@@ -2318,6 +2318,35 @@ class OperatorSemanticsSpec extends SparkTestBase {
     assert(Climate.holtWinters(short).count() == 0L)
   }
 
+  test("span pre-flight: a day array past MaxSpanDays fails, naming its operator") {
+    import graft.operators.{Climate, Inference}
+    val n = Climate.MaxSpanDays + 1
+    val day0 = 946684800L // 2000-01-01 UTC
+    def at(days: org.apache.spark.sql.Column) = timestamp_seconds(lit(day0) + days * 86400L)
+    // one series observed on n consecutive days
+    val series = spark.range(n).select(lit("view").as("event_type"),
+      at(col("id")).as("ts"), col("id").cast("double").as("value"))
+    // 2n users, all viewing on day 0; user u buys on day u/2, so each
+    // arm (u % 2) holds n distinct conversion spans, every one an event day
+    val users = spark.range(2L * n)
+    val spans = users.select(col("id").as("user_id"), lit("view").as("event_type"),
+        at(lit(0L)).as("ts"))
+      .union(users.select(col("id").as("user_id"), lit("purchase").as("event_type"),
+        at(floor(col("id") / 2)).as("ts")))
+    Seq[(String, () => Unit)](
+      "holtTrend" -> (() => Climate.holtTrend(series).collect()),
+      "holtWinters" -> (() => Climate.holtWinters(series).collect()),
+      "kaplanMeier" -> (() => Inference.kaplanMeier(spans).collect()),
+      "logRank" -> (() => Inference.logRank(spans).collect())
+    ).foreach { case (op, run) =>
+      val e = intercept[Exception](run())
+      val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" | ")
+      assert(msg.contains(s"$op: ") && msg.contains(s" has $n days > ${n - 1}"),
+        s"$op: $msg")
+    }
+  }
+
   test("seasonalDecompose: pure weekly cycle decomposes exactly, edges NULL the trend") {
     import spark.implicits._
     import graft.operators.Climate
@@ -2425,6 +2454,25 @@ class OperatorSemanticsSpec extends SparkTestBase {
     }
     assert(nullId.getMessage.contains("NULL vec_id"), nullId.getMessage)
     assert(!nullId.getMessage.contains("exhausted"), nullId.getMessage)
+  }
+
+  test("driver-held selectors: k·d past MaxModelLiterals fails, naming operator and bound") {
+    import spark.implicits._
+    import graft.operators.Similarity
+    // no zero vector: mmrSelect's cosine divides by the norms
+    val emb = Seq((0L, Array(1f, 1f)), (1L, Array(1f, 0f)), (2L, Array(0f, 1f)))
+      .toDF("vec_id", "embedding")
+    val bound = Similarity.MaxModelLiterals
+    val k = bound / 2 + 1 // 2-D vectors: k·d = bound + 2
+    Seq[(String, () => Unit)](
+      "kmeansExact" -> (() => Similarity.kmeansExact(emb, k = k)),
+      "kCenterSelect" -> (() => Similarity.kCenterSelect(emb, k = k)),
+      "mmrSelect" -> (() => Similarity.mmrSelect(emb, queryId = 0L, k = k))
+    ).foreach { case (op, build) =>
+      val e = intercept[IllegalArgumentException](build())
+      assert(e.getMessage.contains(s"$op: ") &&
+        e.getMessage.contains(s"exceed the bound of $bound"), e.getMessage)
+    }
   }
 
   test("cohensD: hand-checked effect size, zero at identical samples, degenerate pool NULLs") {

@@ -26,6 +26,17 @@ class QueriesSpec extends SparkTestBase {
     assert(missing.isEmpty, s"oracle without query: $missing")
   }
 
+  test("day-index queries: every oracle twin counts days from the engine's origin") {
+    val origin = s"DATE '${operators.Climate.DayOrigin}'"
+    val dayIndexed = Seq("q_climate_trend", "q_stats_ols2", "q_stats_theilsen",
+      "q_stats_seasonality", "q_stats_holt", "q_stats_holtwinters", "q_time_decompose",
+      "q_stats_ccf", "q_stats_acf", "q_stats_ljungbox", "q_stats_kendall",
+      "q_stats_spearman", "q_stats_wilcoxon", "q_window_rolling_corr", "q_stats_runs",
+      "q_stats_changepoint", "q_stats_poisson")
+    val off = dayIndexed.filterNot(q => SparkEntry.oracleSql(q).contains(origin))
+    assert(off.isEmpty, s"oracle twins without $origin: $off")
+  }
+
   test("entry returns rows on sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -11,14 +11,14 @@ import graft.operators.{Climate, Dedup, Windows}
   * whole-relation single-task stage:
   * `Windows.prefixSums` (global and grouped), `equiHeightHistogram`,
   * `featureCollection` (maxPerDoc forcing multi-shard months),
-  * and `monthlyResolutions`. A stage listener proves the property the
-  * plans only suggest: across every job here, NO stage with one task
-  * reads more than a trivial number of shuffle records — the big
-  * shuffles all fan out, and the only single-task stages are the
-  * ≤shuffle-partitions-row offset/statistic aggregates. Wall-times are
-  * recorded into [[SoakDoc.Path]] via [[SoakDoc.upsert]] — each suite replaces
-  * ONLY its own section, so a partial run can never drop a sibling
-  * suite's evidence.
+  * and `axisResolutions` by (year, month). A stage listener proves
+  * the property the plans only suggest: across every job here, NO
+  * stage with one task reads more than a trivial number of shuffle
+  * records — the big shuffles all fan out, and the only single-task
+  * stages are the ≤shuffle-partitions-row offset/statistic
+  * aggregates. Wall-times are recorded into [[SoakDoc.Path]] via
+  * [[SoakDoc.upsert]] — each suite replaces ONLY its own section, so
+  * a partial run can never drop a sibling suite's evidence.
   */
 class SoakSpec extends SparkTestBase {
 
@@ -151,11 +151,12 @@ class SoakSpec extends SparkTestBase {
         assert(part.map(_.getInt(2)).sorted.toSeq == (0 until 5), "non-contiguous shards")
       }
 
-      // 4. per-month grid-resolution inference (distinct + bounded window)
+      // 4. per-month grid-resolution inference (one aggregate grouped by
+      //    (year, month); its buffer is each month's bounded distinct grid set)
       val (res, tRes) = timed {
-        Climate.monthlyResolutions(
+        Climate.axisResolutions(
           Climate.withYearMonth(Climate.syntheticGrid(fixture), "ts"),
-          Seq("lat" -> 0.5, "lon" -> 0.625)).collect()
+          Seq("lat" -> 0.5, "lon" -> 0.625), Seq("year", "month")).collect()
       }
       assert(res.length == Copies)
       assert(res.forall(r => r.getDouble(2) == 0.5 && r.getDouble(3) == 0.625))
@@ -207,7 +208,7 @@ class SoakSpec extends SparkTestBase {
            || prefixSums, grouped (80%-dominant stratum) | ${n / 1000000.0}M | ${f"$tGrouped%.1f"} | ${f"$ratio%.2f"} |
            || equiHeightHistogram (16 buckets) | ${n / 1000000.0}M | ${f"$tHist%.1f"} | ${f"$ratio%.2f"} |
            || featureCollection (20k/doc → ${Copies * 5} parts) | ${n / 1000000.0}M | ${f"$tShard%.1f"} | ${f"$ratio%.2f"} |
-           || monthlyResolutions (2 axes × $Copies months) | ${n / 1000000.0}M | ${f"$tRes%.1f"} | ${f"$ratio%.2f"} |
+           || axisResolutions by (year, month) (2 axes × $Copies months) | ${n / 1000000.0}M | ${f"$tRes%.1f"} | ${f"$ratio%.2f"} |
            || interpolateGaps (64 series, incremental frames) | ${n / 1000000.0}M | ${f"$tInterp%.1f"} | ${f"$ratio%.2f"} |
            |""".stripMargin
       SoakDoc.upsert(SoakDoc.Path,

@@ -185,8 +185,8 @@ class ZarrSpec extends SparkTestBase {
     val flat = Zarr.toDataFrame(spark, group, "precip")
       .withColumn("ts", timestamp_seconds(col("time")))
     val withYm = Climate.withYearMonth(flat, "ts")
-    val res = Climate.monthlyResolutions(withYm,
-      Seq("lat" -> 99.0, "lon" -> 99.0)).collect()
+    val res = Climate.axisResolutions(withYm,
+      Seq("lat" -> 99.0, "lon" -> 99.0), Seq("year", "month")).collect()
     assert(res.length == 1) // epoch-hour fixture times: one (year,month)
     assert(res.head.getDouble(2) == 0.5 && res.head.getDouble(3) == 0.625,
       s"inferred ${res.head}")
