@@ -15,7 +15,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
   def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    s.read.parquet(path(dir, name))
+
+  /** The file path of table `name` under `dir`. */
+  def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
   def region(s: SparkSession, d: String): DataFrame    = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = t(s, d, "nation")

@@ -198,88 +198,12 @@ object Climate {
     * cells) the bitmask is ~64 MB while a row collect would blow the
     * driver. For lookups too large (past the 2^31-1 dense-grid bound)
     * or too dynamic to embed, [[landMask]] remains the fallback. */
-  private val cellMaskCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String),
-        graft.plans.CellMask]
-
-  /** Memo caches key on (canonicalized plan, source fingerprint), not
-    * the plan alone: canonicalization compares file sources by ROOT
-    * PATH, so a lookup overwritten or appended at the same path within
-    * one JVM would hit a plan-only key and silently serve stale
-    * results. [[sourceFingerprint]] makes any data change a miss.
-    * Caches are also BOUNDED — past [[PlanCacheBound]] entries they
-    * clear wholesale (memoization is a throughput aid, never a
-    * correctness dependency) — and [[clearPlanCaches]] empties them on
-    * demand. */
-  private val PlanCacheBound = 64
-
-  /** Fingerprint of the concrete files behind a plan's file sources:
-    * (path, length, modificationTime) of every file the scan would
-    * read, taken from each relation's own FileIndex listing (already
-    * computed for the scan — no extra IO).
-    *
-    * Returns None — and callers must then SKIP memoization entirely
-    * (fail closed) — when the plan contains anything the listing
-    * cannot cover: a non-file v1 relation, a DSv2 or RDD-backed or
-    * any other unrecognized leaf, or a subquery expression (whose
-    * nested plan this traversal does not descend into). The covered
-    * leaves are v1 file relations (fingerprinted by listing) and
-    * LocalRelation/OneRowRelation/Range, which embed their data in
-    * the plan and so are fully covered by canonicalized equality. */
-  private[graft] def sourceFingerprint(df: DataFrame): Option[String] = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    import org.apache.spark.sql.catalyst.plans.logical
-    val md = java.security.MessageDigest.getInstance("MD5")
-    var covered = true
-    df.queryExecution.analyzed.foreach { node =>
-      if (node.expressions.exists(_.exists(
-          _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.SubqueryExpression])))
-        covered = false
-      node match {
-        case lr: LogicalRelation => lr.relation match {
-          case fs: HadoopFsRelation =>
-            // listFiles yields (path, length, mtime) for ANY FileIndex
-            // implementation — a path+size-only fallback would miss an
-            // in-place overwrite of identical total size, exactly the
-            // staleness class this fingerprint exists to catch
-            val entries = fs.location.listFiles(Nil, Nil).flatMap(_.files)
-              .map(f => s"${f.getPath}#${f.getLen}#${f.getModificationTime}")
-            entries.sorted.foreach(e =>
-              md.update(e.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-          case _ => covered = false
-        }
-        case _: logical.LocalRelation | _: logical.OneRowRelation |
-             _: logical.Range => ()
-        case _: logical.LeafNode => covered = false
-        case _ => ()
-      }
-    }
-    if (covered) Some(md.digest().map("%02x".format(_)).mkString) else None
-  }
-
-  /** Drop every memoized mask — for callers that just bulk-rewrote
-    * data and want rebuilds without waiting for fingerprint misses to
-    * age entries out. */
-  def clearPlanCaches(): Unit = cellMaskCache.clear()
-
-  def landCellMask(landCells: DataFrame): graft.plans.CellMask = {
-    // memoized per (canonicalized lookup plan, file fingerprint): the
-    // mask build — like a broadcast — is paid once per process per
-    // concrete data version, not once per query invocation. A lookup
-    // whose sources the fingerprint cannot cover (DSv2, RDD-backed,
-    // subqueries) is NOT memoized — fail closed, rebuild every call —
-    // rather than risking a stale mask behind a constant fingerprint.
-    def build() = graft.plans.CellMask.fromCellsDistributed(
-      landCells.select(col("cell_lat"), col("cell_lon")))
-    sourceFingerprint(landCells) match {
-      case None => build()
-      case Some(fp) =>
-        if (cellMaskCache.size >= PlanCacheBound) cellMaskCache.clear()
-        cellMaskCache.getOrElseUpdate(
-          (landCells.queryExecution.analyzed.canonicalized, fp), build())
-    }
-  }
+  def landCellMask(landCells: DataFrame): graft.plans.CellMask =
+    // the mask build — like a broadcast — is paid once per process per
+    // concrete lookup version, not once per query invocation
+    graft.ProcessCache.get(landCells.sparkSession, "cell_mask", landCells)(
+      graft.plans.CellMask.fromCellsDistributed(
+        landCells.select(col("cell_lat"), col("cell_lon"))))
 
   /** Land-mask as a pure codegen'd FILTER: no join operator in the
     * plan — the probe runs inside the scan's whole-stage-codegen loop

@@ -615,7 +615,7 @@ object Dedup {
 
   private def corpusPairs(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame =
-    graft.ProcessCache.get(s, "neardup_pairs:" + d)(
+    graft.ProcessCache.get(s, "neardup_pairs:" + d, Tables.path(d, "documents"))(
       nearDupPairs(Tables.documents(s, d))
         .select(col("id_a"), col("id_b")).localCheckpoint())
 

@@ -310,8 +310,15 @@ object Graph {
   // models and the bucketed-join ingest.
   private def copurchaseGraph(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame =
-    graft.ProcessCache.get(s, "copurchase:" + d)(
+    graft.ProcessCache.get(s, "copurchase:" + d, Tables.path(d, "lineitem"))(
       coPurchaseEdges(Tables.lineitem(s, d)).distinct().localCheckpoint())
+
+  // the canonical undirected edge set of the same graph (degrees and
+  // the triangle census both consume it)
+  private def copurchaseUndirected(s: org.apache.spark.sql.SparkSession,
+      d: String): DataFrame =
+    graft.ProcessCache.get(s, "copurchase_und:" + d, Tables.path(d, "lineitem"))(
+      canonicalUndirected(copurchaseGraph(s, d)).localCheckpoint())
 
   // Supported (>= 2 distinct orders) basket pairs with their counts —
   // ONE memoized ingest-time table feeding both q_assoc_rules (as the
@@ -323,7 +330,7 @@ object Graph {
   // thresholded similarity graph).
   private def basketPairs(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame =
-    graft.ProcessCache.get(s, "basket_pairs:" + d)(
+    graft.ProcessCache.get(s, "basket_pairs:" + d, Tables.path(d, "lineitem"))(
       pairSupports(basketItems(Tables.lineitem(s, d)), 2).localCheckpoint())
 
   private def copurchaseStrong(s: org.apache.spark.sql.SparkSession,
@@ -827,8 +834,7 @@ object Graph {
     // degree histogram of the co-purchase graph (same memoized
     // canonical edge artifact as the triangle census)
     "q_graph_degrees" -> ((s, d) =>
-      degreeDistribution(graft.ProcessCache.get(s, "copurchase_und:" + d)(
-        canonicalUndirected(copurchaseGraph(s, d)).localCheckpoint()))),
+      degreeDistribution(copurchaseUndirected(s, d))),
     // part importance in the co-purchase graph, 3 rounds — the
     // weighted edge list and node set are memoized ingest-time
     // artifacts (checkpointed once per dataset) so repeated ranking
@@ -836,10 +842,12 @@ object Graph {
     // entries per invocation
     "q_graph_pagerank" -> ((s, d) => {
       val e = copurchaseGraph(s, d)
-      val nodes = graft.ProcessCache.get(s, "copurchase_nodes:" + d)(
+      val nodes = graft.ProcessCache.get(s, "copurchase_nodes:" + d,
+          Tables.path(d, "lineitem"))(
         e.select(col("src").as("node")).union(e.select(col("dst")))
           .distinct().localCheckpoint())
-      val ew = graft.ProcessCache.get(s, "copurchase_ew:" + d)(
+      val ew = graft.ProcessCache.get(s, "copurchase_ew:" + d,
+          Tables.path(d, "lineitem"))(
         e.join(e.groupBy(col("src"))
             .agg(count(lit(1)).cast("double").as("outdeg"))
             .hint("shuffle_hash"), Seq("src"))
@@ -850,9 +858,9 @@ object Graph {
     // the canonical and oriented edge sets are memoized ingest-time
     // artifacts (build once, census many)
     "q_graph_triangles" -> ((s, d) => {
-      val und = graft.ProcessCache.get(s, "copurchase_und:" + d)(
-        canonicalUndirected(copurchaseGraph(s, d)).localCheckpoint())
-      val ori = graft.ProcessCache.get(s, "copurchase_ori:" + d)(
+      val und = copurchaseUndirected(s, d)
+      val ori = graft.ProcessCache.get(s, "copurchase_ori:" + d,
+          Tables.path(d, "lineitem"))(
         orient(und).localCheckpoint())
       triangleStatsOver(und, ori)
     }),
@@ -883,7 +891,8 @@ object Graph {
     // hubs/authorities on the customer→supplier purchase digraph —
     // the edge set is a memoized ingest artifact like the others
     "q_graph_hits" -> ((s, d) => hitsBipartite(
-      graft.ProcessCache.get(s, "cust_supp_edges:" + d)(
+      graft.ProcessCache.get(s, "cust_supp_edges:" + d,
+        Tables.path(d, "orders"), Tables.path(d, "lineitem"))(
         Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
           .join(Tables.lineitem(s, d)
             .select(col("l_orderkey").as("o_orderkey"), col("l_suppkey")),

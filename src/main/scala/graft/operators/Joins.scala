@@ -72,20 +72,20 @@ object Joins {
     * This is the 100 TB pattern for a fact-fact join that runs
     * repeatedly: pay the distribution once at ingest, never per query.
     * Join-only frame exposed for the plan assertion; the registered
-    * query aggregates it for the oracle row. */
-  /** sfDirs whose bucketed tables are already built in this session —
-    * the ingest runs ONCE per (process, sfDir), honoring the operator's
-    * own contract ("pay the distribution once at ingest, never per
-    * query"): repeated invocations (bench warmup + timed pass, verify)
-    * measure the join, not a re-ingest. */
-  private val bucketedBuilt = scala.collection.concurrent.TrieMap.empty[String, Unit]
-
+    * query aggregates it for the oracle row.
+    *
+    * The bucketed tables are an ingest artifact built once through
+    * [[graft.ProcessCache]], keyed by the SparkContext that holds them
+    * in its catalog and fingerprinted by the orders and lineitem files:
+    * repeated invocations (bench warmup + timed pass, verify) measure
+    * the join, not a re-ingest, and a fresh SparkContext rebuilds. */
   def bucketedJoin(s: SparkSession, d: String): DataFrame = {
     // table names carry the sfDir so two scale factors in ONE session
     // each get their own bucketed tables — a shared name would let the
     // second build overwrite the first while its cache entry survives
     val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-    bucketedBuilt.getOrElseUpdate(d, {
+    graft.ProcessCache.get(s, "bucketed:" + d,
+        Tables.path(d, "orders"), Tables.path(d, "lineitem")) {
       val warehouse = graft.sources.IO.tmp("graft_bucketed_")
       // repartition(8, key) before bucketBy(8, key): repartition and the
       // bucket spec use the same murmur3 hash, so each task holds exactly
@@ -102,7 +102,7 @@ object Joins {
         .repartition(8, col("l_orderkey"))
         .write.mode("overwrite").bucketBy(8, "l_orderkey").sortBy("l_orderkey")
         .option("path", s"$warehouse/lineitem").saveAsTable(s"graft_bkt_lineitem_$tag")
-    })
+    }
     // merge hint: at harness scale Catalyst would otherwise broadcast
     // the small side and never exercise the bucket co-location; at
     // 100 TB neither side is broadcastable and SMJ is the natural pick

@@ -28,23 +28,24 @@ import org.apache.spark.sql.functions._
   */
 object Population {
 
-  /** Write the wide CSV fixture; returns its directory (under the IO
-    * scratch root, deleted at JVM exit). */
-  def wideCsvFixture(s: SparkSession, d: String): String = {
-    val out = graft.sources.IO.tmp("graft_pop_")
-    val real = Tables.nation(s, d).select(
-      col("n_name").as("Country Name"),
-      ((col("n_nationkey") + 1) * 1000 + 17).cast("string").as("2023"),
-      ((col("n_nationkey") + 1) * 1250 + 3).cast("string").as("2024"))
-    val junk = s.createDataFrame(Seq(
-      ("ATLANTIS", "12345", ".."),       // 2024 non-numeric → gated out
-      ("ARRAKIS", "n/a", "99x"),         // non-numeric → gated out
-      ("NUMENOR", "1000", "2000")        // numeric but not in countries → join-dropped
-    )).toDF("Country Name", "2023", "2024")
-    real.unionByName(junk).coalesce(1)
-      .write.mode("overwrite").option("header", true).csv(out)
-    out
-  }
+  /** Write the wide CSV fixture once per version of `nation`; returns
+    * its directory (under the IO scratch root, deleted at JVM exit). */
+  def wideCsvFixture(s: SparkSession, d: String): String =
+    graft.ProcessCache.get(s, "population_csv:" + d, Tables.path(d, "nation")) {
+      val out = graft.sources.IO.tmp("graft_pop_")
+      val real = Tables.nation(s, d).select(
+        col("n_name").as("Country Name"),
+        ((col("n_nationkey") + 1) * 1000 + 17).cast("string").as("2023"),
+        ((col("n_nationkey") + 1) * 1250 + 3).cast("string").as("2024"))
+      val junk = s.createDataFrame(Seq(
+        ("ATLANTIS", "12345", ".."),       // 2024 non-numeric → gated out
+        ("ARRAKIS", "n/a", "99x"),         // non-numeric → gated out
+        ("NUMENOR", "1000", "2000")        // numeric but not in countries → join-dropped
+      )).toDF("Country Name", "2023", "2024")
+      real.unionByName(junk).coalesce(1)
+        .write.mode("overwrite").option("header", true).csv(out)
+      out
+    }
 
   /** countries lookup: name + deterministic cell-center coordinates
     * (stand-in for the countries.geojson geometries). */

@@ -1464,7 +1464,7 @@ object TextOps {
     // ingest-time tokenizer artifact (train once, encode many),
     // memoized per (process, dataset) like the ANN quantizers
     "q_text_bpe_encode" -> ((s, d) => bpeEncode(Tables.documents(s, d),
-      graft.ProcessCache.get(s, "bpe_merges:" + d)(
+      graft.ProcessCache.get(s, "bpe_merges:" + d, Tables.path(d, "documents"))(
         bpeTrain(Tables.documents(s, d), 12).localCheckpoint()))),
     "q_text_ngram_lm" -> ((s, d) => ngramLmScore(Tables.documents(s, d))),
     // CCNet head/middle/tail carve over the self-trained LM's nll order

@@ -283,22 +283,22 @@ class ClimateSpec extends SparkTestBase {
     import org.apache.spark.sql.types._
     import spark.implicits._
     // v1 parquet scan and plan-embedded local data: coverable
-    assert(Climate.sourceFingerprint(Tables.nation(spark, sf)).isDefined)
-    assert(Climate.sourceFingerprint(Seq((1, 2)).toDF("a", "b")).isDefined)
+    assert(ProcessCache.sourceFingerprint(Tables.nation(spark, sf)).isDefined)
+    assert(ProcessCache.sourceFingerprint(Seq((1, 2)).toDF("a", "b")).isDefined)
     // RDD-backed plan: no file listing exists — must be None so the
     // memo caches skip it instead of caching under a constant print
     val rdd = spark.sparkContext.parallelize(
       Seq(org.apache.spark.sql.Row(1, 2)))
     val rddDf = spark.createDataFrame(rdd, StructType(Seq(
       StructField("cell_lat", IntegerType), StructField("cell_lon", IntegerType))))
-    assert(Climate.sourceFingerprint(rddDf).isEmpty)
+    assert(ProcessCache.sourceFingerprint(rddDf).isEmpty)
     // a subquery expression wraps a nested plan the traversal does not
     // descend into — its relation would otherwise go unfingerprinted
     Tables.region(spark, sf).createOrReplaceTempView("graft_fp_region")
     try {
       val withSub = Tables.nation(spark, sf).filter(
         expr("n_regionkey <= (SELECT max(r_regionkey) FROM graft_fp_region)"))
-      assert(Climate.sourceFingerprint(withSub).isEmpty)
+      assert(ProcessCache.sourceFingerprint(withSub).isEmpty)
     } finally spark.catalog.dropTempView("graft_fp_region")
     // and the fail-closed path still serves correct (uncached) masks
     val m = Climate.landCellMask(rddDf)
